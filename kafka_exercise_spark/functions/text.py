@@ -13,11 +13,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-#: The whitespace character class, written EXPLICITLY because Java's \s
-#: and RE2's (DuckDB's) \s disagree on vertical tab \x0B — Java includes
-#: it, RE2 does not (found by the adversarial parity test). The explicit
-#: class is identical in both engines; for Java it is exactly \s.
-WS_CLASS = "[ \\t\\n\\x0B\\f\\r]"
+#: The whitespace characters, written EXPLICITLY because Java's \s and
+#: RE2's (DuckDB's) \s disagree on vertical tab \x0B — Java includes it,
+#: RE2 does not (found by the adversarial parity test). The explicit set is
+#: identical in both engines; for Java it is exactly \s.
+WS_CHARS = " \t\n\x0B\f\r"
+#: The same set as a regex character class (the characters appear literally).
+WS_CLASS = f"[{WS_CHARS}]"
 
 
 def folded_lower(col: Column | str) -> Column:
@@ -53,7 +55,7 @@ def tokens(col: Column | str) -> Column:
     virgin monomorphic session, stable under full-registry JIT pressure.
     """
     c = F.col(col) if isinstance(col, str) else col
-    t = F.btrim(folded_lower(c), F.lit(" \t\n\x0B\f\r"))
+    t = F.btrim(folded_lower(c), F.lit(WS_CHARS))
     return F.when(t == "", F.array().cast("array<string>")).otherwise(
         F.split(t, WS_CLASS + "+")
     )

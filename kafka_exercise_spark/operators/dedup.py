@@ -779,15 +779,17 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 CC_MAX_ITERS = 25
 
 #: Forest-edge count below which a single task finishes the job exactly.
-#: ~4M (node, root) longs ≈ 64 MB in a pandas frame — comfortably one task.
+#: At 4M forest edges (one per node) that task's union-find dict and set hold
+#: ~0.7 GB of Python objects (~180 B per node, measured with tracemalloc).
 CC_SINGLE_TASK_EDGES = 4_000_000
 
 
 def _forest_contract_fn():
     """Union-find spanning-forest contraction over a partition's (src, dst)
-    edges, as a NESTED closure for ``mapInArrow``: emits one
-    (node → local min-root) edge per node. Union-by-min keeps every root
-    the smallest id in its local tree, so labels only ever decrease.
+    edges, read by column name, as a NESTED closure for ``mapInArrow``:
+    emits one (node → local min-root) edge per node. Union-by-min keeps
+    every root the smallest id in its local tree, so labels only ever
+    decrease.
 
     Closure + Arrow (r12, guide §4.5/§4.1, same rationale as the
     Misra-Gries sketch in textops): Spark hard-kills idle Python workers
@@ -816,7 +818,7 @@ def _forest_contract_fn():
 
         for b in batches:
             for s, d in zip(
-                b.column(0).to_pylist(), b.column(1).to_pylist()
+                b.column("src").to_pylist(), b.column("dst").to_pylist()
             ):
                 seen.add(s)
                 seen.add(d)
@@ -850,7 +852,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the forest fits a single task, which finishes with an exact union-find.
     Two passes end-to-end on any realistic near-dup graph vs the
     O(diameter) rounds label propagation needs (17 rounds on the sf0.1
-    fixture's template chains). Arrow-batched ``mapInPandas`` — per-
+    fixture's template chains). Arrow-batched ``mapInArrow`` — per-
     partition imperative state is exactly what union-find is. At 100 TB the
     same shape holds: the edge list is O(near-dup pairs), orders of
     magnitude smaller than the corpus, each pass shrinks it to ≤ #distinct

@@ -25,6 +25,7 @@ from kafka_exercise_spark.catalog import (
 from kafka_exercise_spark.functions.text import (
     LANG_PROFILES,
     QUALITY_STOPWORDS,
+    WS_CHARS,
     md5_hash64,
     normalized_text,
     profile_hits,
@@ -34,8 +35,8 @@ from kafka_exercise_spark.functions.text import (
 
 #: "BPE-ish" word/punct split: alnum runs or single non-space symbols —
 #: a crude stand-in for subword pretokenization, identical in DuckDB regex.
-#: The whitespace class is explicit (not \s) — see functions.text.WS_CLASS.
-PUNCT_CLASS = "[^a-zA-Z0-9 \\t\\n\\x0B\\f\\r]"
+#: The whitespace set is explicit (not \s) — see functions.text.WS_CHARS.
+PUNCT_CLASS = f"[^a-zA-Z0-9{WS_CHARS}]"
 BPE_REGEX = "[a-zA-Z0-9]+|" + PUNCT_CLASS
 
 
@@ -936,8 +937,8 @@ HH_K = 100
 
 
 def _misra_gries_sketch():
-    """Per-partition Misra-Gries (HH_K counters) over a `t` column as a
-    NESTED closure for ``mapInArrow`` — emits the partition's surviving
+    """Per-partition Misra-Gries (HH_K counters) over the column named `t`
+    as a NESTED closure for ``mapInArrow`` — emits the partition's surviving
     candidate tokens.
 
     Closure + Arrow on purpose (r12, guide §4.5 / §4.1): Spark's
@@ -960,7 +961,7 @@ def _misra_gries_sketch():
 
         counters: dict[str, int] = {}
         for b in batches:
-            for t in b.column(0).to_pylist():
+            for t in b.column("t").to_pylist():
                 if t in counters:
                     counters[t] += 1
                 elif len(counters) < hh_k:
@@ -982,7 +983,7 @@ def _misra_gries_sketch():
 
 def heavy_hitters_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide heavy-hitter tokens via a custom Misra-Gries sketch with
-    EXACT output: per-partition MG sketches (Arrow-batched ``mapInPandas``
+    EXACT output: per-partition MG sketches (Arrow-batched ``mapInArrow``
     — per-partition imperative counter state is exactly what the sketch
     is) propose a candidate set that provably contains every token with
     count·(K+1) > N; an exact recount over just the candidates then kills

@@ -12,15 +12,30 @@ Pins the settings the engine's semantics depend on:
   cluster AQE coalesces or you size ≈ 2-3× total cores. Never hot-loop
   hand-tuned — AQE owns the runtime number.
 - Arrow enabled for the few Pandas-UDF code paths (vector ops, multimodal).
+- On ``local[...]`` masters, Hadoop's local file system without a forked
+  ``chmod``/``readlink`` per file (``localfs``).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from kafka_exercise_spark import localfs
+
+
+def _usable_cpus() -> int:
+    """Cores this process may run on (its affinity mask, not the host's)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no sched_getaffinity off Linux
+        return os.cpu_count() or 1
+
+
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus())
 
 
 def _default_driver_mem() -> str:
@@ -114,10 +129,21 @@ def get_spark(
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
     )
+    if master is None and not os.environ.get("SPARK_GRAFT_NO_MASTER"):
+        master = f"local[{DEFAULT_CPUS}]"
     if master is not None:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_GRAFT_NO_MASTER"):
-        builder = builder.master(f"local[{DEFAULT_CPUS}]")
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # The classes reach only a JVM this call launches (a running one keeps
+    # its class path), and only a local master runs all Hadoop I/O in it.
+    launches_jvm = SparkContext._gateway is None
+    local = re.fullmatch(r"local(\[.*\])?", master or "") is not None
+    cp = localfs.classpath() if launches_jvm and local else None
+    if cp is not None:
+        conf = {**localfs.HADOOP_CONF, **conf}
+        conf["spark.driver.extraClassPath"] = os.pathsep.join(
+            filter(None, (conf.get("spark.driver.extraClassPath"), cp))
+        )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -16,7 +16,8 @@ values differ by deployment shape:
   — exactly right for megabyte-scale state.
 
 ``bounded_replay_conf`` applies the replay profile for the duration of one
-query and restores the session afterwards.
+query and restores the session afterwards. The confs are session-wide, so
+any other query started in the same session meanwhile inherits them.
 """
 
 from __future__ import annotations
@@ -52,6 +53,12 @@ BOUNDED_REPLAY_CONF = {
 @contextmanager
 def bounded_replay_conf(spark: SparkSession, extra: dict[str, str] | None = None):
     """Temporarily apply the bounded-replay state profile (see module doc).
+
+    The profile is set with ``spark.conf.set``, i.e. on the whole session,
+    not on one query: while the block runs, every query the session plans
+    or starts, from any thread, sees the replay's shuffle partitions and
+    state store provider. Run replays where nothing else shares the
+    session, or give a concurrent query its own ``spark.newSession()``.
 
     ``extra`` lets one replay add a query-scoped conf on top of the
     shared profile (e.g. suppressing the final no-data micro-batch where

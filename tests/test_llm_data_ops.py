@@ -876,6 +876,26 @@ def test_heavy_hitters_exact_regardless_of_sketch(spark, sf_dir):
     assert len(got) > 0
 
 
+def test_arrow_closures_read_columns_by_name():
+    import pyarrow as pa
+
+    def batch(**cols):
+        return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
+
+    src, dst = pa.array([5, 7, 9], pa.int64()), pa.array([7, 9, 2], pa.int64())
+    contract = dedup._forest_contract_fn()
+    forest = [b.to_pydict() for b in contract([batch(src=src, dst=dst)])]
+    w = pa.array([0, 0, 0], pa.int64())
+    swapped = [b.to_pydict() for b in contract([batch(w=w, dst=dst, src=src)])]
+    assert forest == swapped
+    assert set(forest[0]["dst"]) == {2}
+
+    toks = pa.array(["a", "b", "a"])
+    sketch = textops._misra_gries_sketch()
+    got = [b.to_pydict() for b in sketch([batch(n=pa.array([1, 2, 3]), t=toks)])]
+    assert got == [{"t": ["a", "b"]}]
+
+
 def test_decontaminate_semantic_pairs_are_true_hits(spark, sf_dir):
     import numpy as np
 

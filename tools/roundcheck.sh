@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # One-command round validation: the full battery the verify skill describes.
-# Usage: bash tools/roundcheck.sh          (~25 min on local[32])
+# Usage: bash tools/roundcheck.sh
 # Runs every stage, prints a per-stage verdict, exits non-zero if ANY
 # stage failed. pipefail is load-bearing: without it the `| tail` pipes
 # would swallow the tools' exit codes.
@@ -9,8 +9,12 @@ cd "$(dirname "$0")/.."
 fail=0
 stage() { echo "=== $1"; }
 
-stage "pytest (full suite)"
-python -m pytest tests/ -q || fail=1
+stage "pytest (full suite, Tier-1 environment)"
+SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+    python -m pytest tests/ -q || fail=1
+
+stage "perfbench self-tests"
+python3 -m pytest perfbench -q || fail=1
 
 stage "oracle sweep sf0.01 (the driver gate, emulated)"
 python tools/verify_local.py /root/testdata/sf0.01 | tail -3 || fail=1
