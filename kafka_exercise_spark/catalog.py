@@ -16,7 +16,9 @@ projections expressed on these views push down to the parquet scan (Catalyst
 
 from __future__ import annotations
 
+import logging
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +35,8 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+log = logging.getLogger(__name__)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -81,38 +85,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-#: Registry of every served-index/frame memo in the package, with an
-#: optional per-value cleanup. All registered memos share one key
-#: contract — key[0] is the owning applicationId — so entries belonging
-#: to dead applications can be evicted centrally: a long-lived Python
-#: process running several Spark sessions otherwise accumulates dead
-#: DataFrames, checkpoint RDD references, and tempdirs forever.
-_MEMO_REGISTRY: list[tuple[dict, object]] = []
-
-
-def register_memo(memo: dict, cleanup=None) -> dict:
-    """Enroll a memo dict (key[0] MUST be the applicationId) for stale-
-    application eviction; ``cleanup(value)`` runs on evicted values (e.g.
-    tempdir removal). Returns the dict for inline use."""
-    _MEMO_REGISTRY.append((memo, cleanup))
-    return memo
-
-
-def evict_stale_memos(spark: SparkSession) -> None:
-    """Drop every registered memo entry owned by an applicationId other
-    than the active session's. Called from each memo accessor, so the
-    process holds at most one application's worth of served state. Cheap
-    when nothing is stale (one dict scan per memo)."""
-    app = spark.sparkContext.applicationId
-    for memo, cleanup in _MEMO_REGISTRY:
-        for k in [k for k in memo if k[0] != app]:
-            v = memo.pop(k)
-            if cleanup is not None:
-                try:
-                    cleanup(v)
-                except Exception:  # cleanup is best-effort by design
-                    pass
-
+#: Every served-state cache in the package, in one dict:
+#: (applicationId, name, sf_dir) → (value, fingerprint, cleanup).
+_MEMO: dict[tuple[str, str, str], tuple[object, tuple, object]] = {}
 
 #: Append-only log of cold memo builds: {"memo", "seconds"} per build.
 #: The scaling harness drains this around each timed run so every rung
@@ -122,13 +97,6 @@ def evict_stale_memos(spark: SparkSession) -> None:
 MEMO_BUILD_LOG: list[dict] = []
 
 
-def log_memo_build(name: str, seconds: float) -> None:
-    """Record one cold memo build. Called by ``memo_frame`` and by the
-    ad-hoc served-index memos (LSH pairs, IVF assignment, BPE/perceptron
-    fits, …) at their build sites."""
-    MEMO_BUILD_LOG.append({"memo": name, "seconds": round(seconds, 3)})
-
-
 def drain_memo_build_log() -> list[dict]:
     """Return and clear the accumulated build records (harness hook)."""
     out = list(MEMO_BUILD_LOG)
@@ -136,47 +104,92 @@ def drain_memo_build_log() -> list[dict]:
     return out
 
 
-def timed_build(name: str, build):
-    """Run ``build()``, logging its wall time as a cold memo build —
-    the one-liner the ad-hoc memo sites wrap their build call in."""
-    t0 = time.perf_counter()
-    out = build()
-    log_memo_build(name, time.perf_counter() - t0)
-    return out
+def _fingerprint(sf_dir: str) -> tuple:
+    """(path, size, mtime_ns) of every file under each table of ``sf_dir``.
 
-
-#: Served-frame memo: (applicationId, *key) → materialized DataFrame.
-#: The SAME contract as the similarity/dedup index memos — a frame an
-#: operator family reads repeatedly is materialized ONCE per session per
-#: sf_dir instead of re-persisted (and leaked) on every invocation.
-_FRAME_MEMO: dict[tuple, DataFrame] = register_memo({})
-
-
-def memo_frame(spark: SparkSession, key: tuple, build) -> DataFrame:
-    """Materialize ``build()`` once per (application, key) and serve the
-    lineage-free checkpoint to every caller.
-
-    ``localCheckpoint`` (eager) both executes the plan and frees callers
-    from the source lineage — repeated operator invocations (bench
-    passes, verify sweeps, determinism tests) reuse one stored copy
-    instead of stacking identical persisted RDDs for the session's
-    lifetime. At 100 TB the analog is the materialized index/staging
-    table on the lake.
-
-    CONTRACT: the key must uniquely identify the data the builder reads
-    within this application — the memo cannot see through a changed
-    ``load_table`` or rewritten parquet behind an old key. In tests that
-    monkeypatch ``load_table`` with hand frames, use a UNIQUE placeholder
-    sf_dir per hand frame (not a shared "x"), or the first test's frame
-    is served to the second.
+    Only the table paths are walked — a build that writes elsewhere under
+    ``sf_dir`` (a landing dir, a sink) must not invalidate itself. A
+    missing table, or a file that vanishes mid-walk, is simply absent.
     """
-    evict_stale_memos(spark)
-    k = (spark.sparkContext.applicationId, *key)
-    df = _FRAME_MEMO.get(k)
-    if df is None:
-        df = timed_build(str(key[0]), lambda: build().localCheckpoint())
-        _FRAME_MEMO[k] = df
-    return df
+    out = []
+    for t in TABLES:
+        root = table_path(sf_dir, t)
+        files = [root] if os.path.isfile(root) else sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
+        )
+        for path in files:
+            try:
+                st = os.stat(path)
+            except FileNotFoundError:
+                continue
+            out.append((path, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def _drop(key: tuple, entry: tuple) -> None:
+    value, _, cleanup = entry
+    if cleanup is not None:
+        try:
+            cleanup(value)
+        except Exception:  # best-effort: a failed cleanup must not fail the caller
+            log.warning("memo cleanup failed for %s", key, exc_info=True)
+
+
+def memo(spark: SparkSession, name: str, sf_dir: str, build, cleanup=None):
+    """Serve ``build()`` once per (application, ``name``, ``sf_dir``) and
+    per state of the tables it read.
+
+    Every served index, fit, landed replay and materialized frame in the
+    package goes through here, so they all share one contract:
+
+    - entries owned by another applicationId are dropped (with their
+      ``cleanup``) on the next call — a long-lived Python process running
+      several Spark sessions holds at most one application's state;
+    - each entry stores a fingerprint of the files under every
+      ``table_path(sf_dir, t)``; when a table is rewritten the old entry's
+      ``cleanup`` runs and the value is rebuilt, so served state follows
+      its inputs instead of going stale;
+    - every cold build appends one ``{"memo", "seconds"}`` record to
+      ``MEMO_BUILD_LOG``.
+
+    ``name`` must carry every build parameter other than ``sf_dir``.
+    Tests that monkeypatch ``load_table`` with hand frames over a
+    non-existent ``sf_dir`` see a constant (empty) fingerprint, so they
+    must still pass a UNIQUE placeholder ``sf_dir`` per hand frame, or an
+    earlier test's value is served back.
+    """
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _MEMO if k[0] != app]:
+        _drop(k, _MEMO.pop(k))
+    key = (app, name, sf_dir)
+    fp = _fingerprint(sf_dir)
+    hit = _MEMO.get(key)
+    if hit is not None:
+        if hit[1] == fp:
+            return hit[0]
+        _drop(key, _MEMO.pop(key))
+    t0 = time.perf_counter()
+    value = build()
+    MEMO_BUILD_LOG.append(
+        {"memo": name, "seconds": round(time.perf_counter() - t0, 3)}
+    )
+    _MEMO[key] = (value, fp, cleanup)
+    return value
+
+
+def rm_parent_dir(path: str) -> None:
+    """``memo`` cleanup for a value at ``<mkdtemp dir>/<leaf>``: remove the
+    whole temp dir (landed input, checkpoint and output alike)."""
+    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+
+
+def memo_frame(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
+    """``memo`` of ``build()``'s eager ``localCheckpoint``: the plan runs
+    once and every caller reads one lineage-free stored copy instead of
+    stacking identical persisted RDDs for the session's lifetime. At
+    100 TB the analog is the materialized index/staging table on the lake.
+    """
+    return memo(spark, name, sf_dir, lambda: build().localCheckpoint())
 
 
 def scale_partitions(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -74,7 +74,8 @@ def er_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of re-persisting (and leaking) a copy per invocation
     v = memo_frame(
         spark,
-        ("er_variants", sf_dir),
+        "er_variants",
+        sf_dir,
         lambda: scale_partitions(
             load_table(spark, sf_dir, "customer"), spark
         ).select(

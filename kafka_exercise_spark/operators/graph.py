@@ -81,7 +81,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    fwd = memo_frame(spark, ("pagerank_fwd", sf_dir), _build_fwd)
+    fwd = memo_frame(spark, "pagerank_fwd", sf_dir, _build_fwd)
 
     def _build_out() -> DataFrame:
         edges = fwd.unionByName(
@@ -92,7 +92,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reused by every iteration (the expensive invariant)
         return edges.join(deg, "src")
 
-    out = memo_frame(spark, ("pagerank_out", sf_dir), _build_out)
+    out = memo_frame(spark, "pagerank_out", sf_dir, _build_out)
 
     ranks = out.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(RANK_SCALE).cast("long").alias("rank")

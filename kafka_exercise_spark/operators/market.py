@@ -53,7 +53,7 @@ def basket_pair_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_orderkey",
         )
 
-    items = memo_frame(spark, ("basket_items", sf_dir), _build_items)
+    items = memo_frame(spark, "basket_items", sf_dir, _build_items)
     n_orders = items.select("l_orderkey").distinct().agg(
         F.count("*").alias("n_orders")
     )

@@ -29,13 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from kafka_exercise_spark.catalog import (
-    evict_stale_memos,
-    load_table,
-    register_memo,
-    scale_partitions,
-    timed_build,
-)
+from kafka_exercise_spark.catalog import load_table, memo, scale_partitions
 from kafka_exercise_spark.functions.text import md5_hash64
 
 
@@ -1124,36 +1118,28 @@ def export_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shard_manifest(_packed_layout(_selected_frame(spark, sf_dir)))
 
 
-#: One persisted (doc_id, n_tok) weighted-selection survivor frame per
-#: (application, sf_dir), shared by every export consumer (packed +
-#: bucketed manifests, their deltas, the selected decision sheet) — the
-#: _HASHED_SHINGLES_MEMO discipline applied to the selection: before the
-#: memo, six entries each re-ran the full selection subtree (corpus scan
-#: + component join + per-source window). At 100 TB this IS the selected
-#: corpus, checkpointed to the lake once by the selection job and read
-#: by every downstream layout/export job.
-_SELECTED_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def _selected_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The memoized, eagerly-persisted (doc_id, n_tok) selection frame."""
-    evict_stale_memos(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SELECTED_MEMO.get(key)
-    if df is None:
+    """The memoized, eagerly-persisted (doc_id, n_tok) weighted-selection
+    survivor frame, shared by every export consumer (packed + bucketed
+    manifests, their deltas, the selected decision sheet): without the
+    memo, six entries each re-ran the full selection subtree (corpus scan
+    + component join + per-source window). At 100 TB this IS the selected
+    corpus, checkpointed to the lake once by the selection job and read
+    by every downstream layout/export job.
+    """
 
-        def _build():
-            out = (
-                token_budget_weighted(spark, sf_dir)
-                .select("doc_id", "n_tok")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            out.count()
-            return out
+    def _build():
+        out = (
+            token_budget_weighted(spark, sf_dir)
+            .select("doc_id", "n_tok")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        out.count()
+        return out
 
-        df = timed_build("selected_corpus", _build)
-        _SELECTED_MEMO[key] = df
-    return df
+    return memo(
+        spark, "selected_corpus", sf_dir, _build, cleanup=lambda df: df.unpersist()
+    )
 
 
 def _manifest_per_shard(manifest: DataFrame, prefix: str) -> DataFrame:
@@ -1600,7 +1586,7 @@ def _version_selected_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cum_tok") - F.col("n_tok") < F.col("budget_tokens")
         ).select("doc_id", "n_tok")
 
-    return memo_frame(spark, ("version_selected", sf_dir), _build)
+    return memo_frame(spark, "version_selected", sf_dir, _build)
 
 
 def export_version_delta(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,20 +18,12 @@ loop beats Arrow round-trips; it wins only at ≥ ~1k dims.
 
 from __future__ import annotations
 
-import time
-
 import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_exercise_spark.catalog import (
-    evict_stale_memos,
-    load_table,
-    log_memo_build,
-    register_memo,
-    timed_build,
-)
+from kafka_exercise_spark.catalog import load_table, memo, memo_frame
 from kafka_exercise_spark.functions.text import md5_hash64
 from kafka_exercise_spark.functions.vectors import cosine, dot
 
@@ -114,25 +106,17 @@ def lsh_bucket(col: F.Column) -> F.Column:
     return bucket
 
 
-#: Materialized bucket-labeled corpus per (application, sf_dir) — the
-#: served LSH index both probe variants read (same contract as the IVF
-#: assigned-frame memo; at 100 TB this is the bucket-partitioned table).
-_LSH_INDEX_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def _lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    evict_stale_memos(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _LSH_INDEX_MEMO.get(key)
-    if df is None:
-        df = timed_build(
-            "lsh_index",
-            lambda: _embeddings_double(spark, sf_dir)
-            .withColumn("bucket", lsh_bucket(F.col("emb")))
-            .localCheckpoint(),
-        )
-        _LSH_INDEX_MEMO[key] = df
-    return df
+    """Materialized bucket-labeled corpus — the served LSH index both probe
+    variants read (at 100 TB this is the bucket-partitioned table)."""
+    return memo_frame(
+        spark,
+        "lsh_index",
+        sf_dir,
+        lambda: _embeddings_double(spark, sf_dir).withColumn(
+            "bucket", lsh_bucket(F.col("emb"))
+        ),
+    )
 
 
 N_IVF_CELLS = 16
@@ -141,14 +125,6 @@ N_PROBE = 4
 
 IVF_TRAIN_MAX = 4096  # vectors collected for the coarse quantizer
 IVF_ITERS = 5  # Lloyd iterations — IVF recall barely moves past a few
-#: (applicationId, sf_dir) → built centroids — keyed like every other
-#: memo so a new session (or a test monkeypatching load_table under a
-#: reused sf_dir) never gets stale centroids desynced from its data.
-_IVF_INDEX: dict[tuple[str, str], list[list[int]]] = register_memo({})
-#: Materialized cell-assignment frames, keyed by (application, sf_dir) —
-#: the served IVF index every consumer probes (same contract as
-#: dedup._LSH_PAIRS_MEMO).
-_IVF_ASSIGNED_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
 
 
 def quantized_vec(col: F.Column) -> F.Column:
@@ -281,18 +257,10 @@ def _ivf_assign(spark: SparkSession, sf_dir: str):
     engine-independent; the DuckDB oracle replays the identical fit and
     assignment.
     """
-    evict_stale_memos(spark)
     emb = _embeddings_double(spark, sf_dir)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    centers = _IVF_INDEX.get(memo_key)
-    if centers is None:
-        centers = _IVF_INDEX[memo_key] = timed_build(
-            "ivf_centroids", lambda: _ivf_centroids(emb)
-        )
+    centers = memo(spark, "ivf_centroids", sf_dir, lambda: _ivf_centroids(emb))
 
-    assigned = _IVF_ASSIGNED_MEMO.get(memo_key)
-    if assigned is None:
-        _t0_build = time.perf_counter()
+    def _build_assigned() -> DataFrame:
         # the assignment scan runs ONCE per (session, corpus) and is pinned
         # — every IVF consumer (ANN probe, SemDeDup) then reads the
         # materialized index instead of re-running the per-row 16-cell
@@ -318,7 +286,7 @@ def _ivf_assign(spark: SparkSession, sf_dir: str):
         # projection barrier: materialize the 16-cell distance fold ONCE
         # per row — inlining it into array_position(dists, array_min(...))
         # evaluates the full fold twice per row (measured 2.4s -> 0.8s)
-        assigned = (
+        return (
             emb.withColumn("ei", quantized_vec(F.col("emb")))
             .withColumn("dists", dists)
             .withColumn(
@@ -328,10 +296,9 @@ def _ivf_assign(spark: SparkSession, sf_dir: str):
                 ).cast("int"),
             )
             .drop("dists")
-            .localCheckpoint()
         )
-        _IVF_ASSIGNED_MEMO[memo_key] = assigned
-        log_memo_build("ivf_assigned", time.perf_counter() - _t0_build)
+
+    assigned = memo_frame(spark, "ivf_assigned", sf_dir, _build_assigned)
     return assigned, centers
 
 
@@ -583,12 +550,6 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Matches dedup.COSINE_DUP_THRESHOLD's fixture calibration.
 SEMANTIC_DUP_THRESHOLD = 0.25
 
-#: Materialized semantic pair sets, keyed by (application, sf_dir) — the
-#: hub the components/survivor stage consumes (same contract as
-#: dedup._LSH_PAIRS_MEMO).
-_SEMANTIC_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     cluster the embedding space with the IVF coarse quantizer, then compare
@@ -610,37 +571,31 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (cell, id_a, id_b, cos, drop_id) — the pair evidence plus the
     removal decision (keep-lowest survivor rule).
     """
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SEMANTIC_PAIRS_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    _t0_build = time.perf_counter()
-    assigned, _ = _ivf_assign(spark, sf_dir)
-    # both self-join sides project straight off the materialized index
-    # (which already carries the fixed-point ints the pair stage needs)
-    idx = assigned.select("cell", "vec_id", "ei")
-    a = idx.withColumnsRenamed({"vec_id": "id_a", "ei": "ei_a"})
-    b = idx.withColumnsRenamed({"vec_id": "id_b", "ei": "ei_b"})
-    pairs = (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_e6", int_cos_e6(F.col("ei_a"), F.col("ei_b")))
-        .filter(
-            F.col("cos_e6") >= int(round(SEMANTIC_DUP_THRESHOLD * 1_000_000))
+
+    def _build() -> DataFrame:
+        assigned, _ = _ivf_assign(spark, sf_dir)
+        # both self-join sides project straight off the materialized index
+        # (which already carries the fixed-point ints the pair stage needs)
+        idx = assigned.select("cell", "vec_id", "ei")
+        a = idx.withColumnsRenamed({"vec_id": "id_a", "ei": "ei_a"})
+        b = idx.withColumnsRenamed({"vec_id": "id_b", "ei": "ei_b"})
+        return (
+            a.join(b, "cell")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .withColumn("cos_e6", int_cos_e6(F.col("ei_a"), F.col("ei_b")))
+            .filter(
+                F.col("cos_e6") >= int(round(SEMANTIC_DUP_THRESHOLD * 1_000_000))
+            )
+            .select(
+                F.col("cell").cast("long").alias("cell"),
+                "id_a",
+                "id_b",
+                (F.col("cos_e6") / 1_000_000).alias("cos"),
+                F.col("id_b").alias("drop_id"),
+            )
         )
-        .select(
-            F.col("cell").cast("long").alias("cell"),
-            "id_a",
-            "id_b",
-            (F.col("cos_e6") / 1_000_000).alias("cos"),
-            F.col("id_b").alias("drop_id"),
-        )
-        .localCheckpoint()
-    )
-    _SEMANTIC_PAIRS_MEMO[memo_key] = pairs
-    log_memo_build("semantic_pairs", time.perf_counter() - _t0_build)
-    return pairs
+
+    return memo_frame(spark, "semantic_pairs", sf_dir, _build)
 
 
 #: Hybrid score mix: score = HYBRID_ALPHA·cosine + (1-HYBRID_ALPHA)·Jaccard.
@@ -922,11 +877,6 @@ PQ_M = 4  # subspaces
 PQ_SUBDIM = EMBED_DIM // PQ_M
 PQ_K = 16  # centroids per sub-quantizer (4-bit codes)
 PQ_ITERS = 3
-#: (applicationId, sf_dir) → [m][k][dim] codebooks (memo key contract).
-_PQ_CODEBOOKS: dict[tuple[str, str], list[list[list[int]]]] = register_memo({})
-#: Materialized PQ code tables per (application, sf_dir) — the index-side
-#: payload IVF-PQ search scans (same memo contract as the cell frames).
-_PQ_CODES_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
 
 
 def _pq_codebooks(emb: DataFrame) -> list[list[list[int]]]:
@@ -962,6 +912,16 @@ def _pq_codebooks(emb: DataFrame) -> list[list[list[int]]]:
     ]
 
 
+def pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[int]]]:
+    """The served [m][k][dim] PQ codebooks of ``sf_dir``, fitted once."""
+    return memo(
+        spark,
+        "pq_codebooks",
+        sf_dir,
+        lambda: _pq_codebooks(_embeddings_double(spark, sf_dir)),
+    )
+
+
 def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encoding + reconstruction audit — how a 100 TB
     embedding store actually keeps its vectors searchable: each vector
@@ -976,14 +936,8 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the all-integer Lloyd fit), so codes AND errors carry a full
     value-hash oracle.
     """
-    evict_stale_memos(spark)
     emb = _embeddings_double(spark, sf_dir)
-    bkey = (spark.sparkContext.applicationId, sf_dir)
-    books = _PQ_CODEBOOKS.get(bkey)
-    if books is None:
-        books = _PQ_CODEBOOKS[bkey] = timed_build(
-            "pq_codebooks", lambda: _pq_codebooks(emb)
-        )
+    books = pq_books(spark, sf_dir)
     out = emb.withColumn("ei", quantized_vec(F.col("emb")))
     code_cols = []
     err_total = F.lit(0).cast("long")
@@ -1065,26 +1019,18 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the bounded demo query set, like ``ann_ivf_topk``'s probe list).
     """
     assigned, centers = _ivf_assign(spark, sf_dir)
-    bkey = (spark.sparkContext.applicationId, sf_dir)
-    books = _PQ_CODEBOOKS.get(bkey)
-    if books is None:
-        books = _PQ_CODEBOOKS[bkey] = timed_build(
-            "pq_codebooks",
-            lambda: _pq_codebooks(_embeddings_double(spark, sf_dir)),
-        )
+    books = pq_books(spark, sf_dir)
     # the code table is part of the served index — encoded once per
     # (session, corpus) and pinned, like the cell assignment (at 100 TB
     # it IS the 2-byte-per-vector payload the probe scan reads)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    codes = _PQ_CODES_MEMO.get(memo_key)
-    if codes is None:
-        codes = timed_build(
-            "pq_codes",
-            lambda: pq_encode(spark, sf_dir)
-            .select("vec_id", "code0", "code1", "code2", "code3")
-            .localCheckpoint(),
-        )
-        _PQ_CODES_MEMO[memo_key] = codes
+    codes = memo_frame(
+        spark,
+        "pq_codes",
+        sf_dir,
+        lambda: pq_encode(spark, sf_dir).select(
+            "vec_id", "code0", "code1", "code2", "code3"
+        ),
+    )
     q_rows = (
         assigned.filter(F.col("vec_id") < N_QUERIES)
         .select("vec_id", "ei")
@@ -1192,83 +1138,76 @@ def embedding_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Memoized (exploded-quantized frame, fitted component) per
-#: (application, sf_dir) — the served decomposition both the component
-#: entry and the anisotropy report read (same contract as the IVF/LSH
-#: index memos).
-_PI_FIT_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = register_memo({})
-
-
 def _power_fit(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Run the integer power iteration once per (app, sf_dir); return the
     persisted exploded frame q = (vec_id, j, a) and the fitted 64-row
     component v = (j, v). See embedding_top_component for the algorithm
-    and exactness argument."""
-    evict_stale_memos(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _PI_FIT_MEMO.get(key)
-    if memo is not None:
-        return memo
-    _t0_build = time.perf_counter()
-    emb = _embeddings_double(spark, sf_dir)
-    q = (
-        emb.select(
-            "vec_id", F.posexplode(quantized_vec(F.col("emb"))).alias("j", "a")
+    and exactness argument. The served decomposition both the component
+    entry and the anisotropy report read; ``q`` is unpersisted when the
+    fit is dropped."""
+
+    def _build() -> tuple[DataFrame, DataFrame]:
+        emb = _embeddings_double(spark, sf_dir)
+        q = (
+            emb.select(
+                "vec_id", F.posexplode(quantized_vec(F.col("emb"))).alias("j", "a")
+            )
+            .select("vec_id", (F.col("j") + 1).alias("j"), "a")
+            .persist()
         )
-        .select("vec_id", (F.col("j") + 1).alias("j"), "a")
-        .persist()
+        q.count()
+        v = spark.range(1, EMBED_DIM + 1).select(
+            F.col("id").alias("j"), F.lit(PI_V_SCALE).cast("long").alias("v")
+        )
+        sgn = "CASE WHEN {x} < 0 THEN -1 ELSE 1 END"
+        for _ in range(PI_ITERS):
+            s = (
+                q.join(F.broadcast(v), "j")
+                .groupBy("vec_id")
+                .agg(F.sum(F.col("a") * F.col("v")).alias("s_raw"))
+                .select(
+                    "vec_id",
+                    F.expr(
+                        f"({sgn.format(x='s_raw')}) * (abs(s_raw) div {PROJ_SCALE})"
+                    ).alias("s"),
+                )
+            )
+            w = (
+                q.join(s, "vec_id")
+                .groupBy("j")
+                .agg(F.sum(F.col("a") * F.col("s")).alias("w_raw"))
+                # down-shift before renorm so |w|·PI_V_SCALE stays < 2⁶³
+                .select(
+                    "j",
+                    F.expr(
+                        f"({sgn.format(x='w_raw')}) * (abs(w_raw) div {PROJ_SCALE})"
+                    ).alias("w"),
+                )
+            )
+            m = w.agg(
+                F.greatest(F.max(F.abs(F.col("w"))), F.lit(1)).alias("m")
+            )
+            # cut lineage every round: v references q at TWO levels (via s and
+            # w), so the uncut logical plan doubles per iteration — 2^iters
+            # scan references kills the optimizer long before execution. The
+            # checkpoint is 64 rows; values are unchanged (exact integers).
+            v = (
+                w.crossJoin(F.broadcast(m))
+                .select(
+                    "j",
+                    F.expr(
+                        f"({sgn.format(x='w')}) * ((abs(w) * {PI_V_SCALE}) div m)"
+                    ).alias("v"),
+                )
+                .localCheckpoint()
+            )
+        return q, v
+
+    return memo(
+        spark, "power_fit", sf_dir, _build, cleanup=lambda qv: qv[0].unpersist()
     )
-    q.count()
-    v = spark.range(1, EMBED_DIM + 1).select(
-        F.col("id").alias("j"), F.lit(PI_V_SCALE).cast("long").alias("v")
-    )
-    sgn = "CASE WHEN {x} < 0 THEN -1 ELSE 1 END"
-    for _ in range(PI_ITERS):
-        s = (
-            q.join(F.broadcast(v), "j")
-            .groupBy("vec_id")
-            .agg(F.sum(F.col("a") * F.col("v")).alias("s_raw"))
-            .select(
-                "vec_id",
-                F.expr(
-                    f"({sgn.format(x='s_raw')}) * (abs(s_raw) div {PROJ_SCALE})"
-                ).alias("s"),
-            )
-        )
-        w = (
-            q.join(s, "vec_id")
-            .groupBy("j")
-            .agg(F.sum(F.col("a") * F.col("s")).alias("w_raw"))
-            # down-shift before renorm so |w|·PI_V_SCALE stays < 2⁶³
-            .select(
-                "j",
-                F.expr(
-                    f"({sgn.format(x='w_raw')}) * (abs(w_raw) div {PROJ_SCALE})"
-                ).alias("w"),
-            )
-        )
-        m = w.agg(
-            F.greatest(F.max(F.abs(F.col("w"))), F.lit(1)).alias("m")
-        )
-        # cut lineage every round: v references q at TWO levels (via s and
-        # w), so the uncut logical plan doubles per iteration — 2^iters
-        # scan references kills the optimizer long before execution. The
-        # checkpoint is 64 rows; values are unchanged (exact integers).
-        v = (
-            w.crossJoin(F.broadcast(m))
-            .select(
-                "j",
-                F.expr(
-                    f"({sgn.format(x='w')}) * ((abs(w) * {PI_V_SCALE}) div m)"
-                ).alias("v"),
-            )
-            .localCheckpoint()
-        )
-    _PI_FIT_MEMO[key] = (q, v)
-    log_memo_build("power_fit", time.perf_counter() - _t0_build)
-    return q, v
 
 
 def embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:

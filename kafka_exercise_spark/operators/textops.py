@@ -9,17 +9,13 @@ the cost is one pruned-column parquet scan at full codegen throughput.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_exercise_spark.catalog import (
-    evict_stale_memos,
     load_table,
-    log_memo_build,
+    memo,
     memo_frame,
-    register_memo,
     scale_partitions,
 )
 from kafka_exercise_spark.functions.text import (
@@ -624,7 +620,8 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # served once per (app, sf_dir) via the shared memo
     base = memo_frame(
         spark,
-        ("bigram_base", sf_dir),
+        "bigram_base",
+        sf_dir,
         lambda: scale_partitions(
             load_table(spark, sf_dir, "documents"), spark
         )
@@ -1117,10 +1114,6 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_APPLY_MERGES = 8
 assert BPE_APPLY_MERGES <= BPE_RANK_CAP
 
-#: Collected merge tables per (application, sf_dir) — 8 strings each.
-_BPE_MERGES_MEMO: dict[tuple[str, str], list[str]] = register_memo({})
-
-
 def bpe_segment_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer training step 2: APPLY the top-``BPE_APPLY_MERGES``
     learned merges and report per-document segmentation stats — symbol
@@ -1149,20 +1142,18 @@ def bpe_segment_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the merge table is a pure function of (sf_dir) — memoize the 8-row
     # collect so repeated invocations (bench passes, determinism checks)
     # don't re-run the corpus-wide pair aggregation each time
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    merges = _BPE_MERGES_MEMO.get(memo_key)
-    if merges is None:
-        _t0_build = time.perf_counter()
-        merges = [
+    merges = memo(
+        spark,
+        "bpe_merges",
+        sf_dir,
+        lambda: [
             r.pair
             for r in bpe_pair_counts(spark, sf_dir)
             .where(F.col("merge_rank") <= BPE_APPLY_MERGES)
             .orderBy("merge_rank")
             .collect()
-        ]
-        _BPE_MERGES_MEMO[memo_key] = merges
-        log_memo_build("bpe_merges", time.perf_counter() - _t0_build)
+        ],
+    )
     docs = scale_partitions(load_table(spark, sf_dir, "documents"), spark)
     words = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("w")
@@ -1379,9 +1370,6 @@ def classifier_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame
 BPE_TRAIN_ROUNDS = 6
 
 
-_BPE_FIT_MEMO: dict = register_memo({})
-
-
 def _bpe_fit(spark: SparkSession, sf_dir: str):
     """The ITERATIVE BPE trainer (Sennrich et al. 2016, alg. 1) — the real
     thing, where merges interact: each round counts adjacent-symbol pairs
@@ -1408,65 +1396,62 @@ def _bpe_fit(spark: SparkSession, sf_dir: str):
     chain). All counts are exact integers; argmax tie-break is
     (freq desc, pair asc).
     """
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key in _BPE_FIT_MEMO:
-        return _BPE_FIT_MEMO[memo_key]
-    _t0_build = time.perf_counter()
-    docs = scale_partitions(load_table(spark, sf_dir, "documents"), spark)
-    vocab = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-    )
-    seg = vocab.select(
-        "word",
-        "freq",
-        F.trim(F.regexp_replace(F.col("word"), "(.)", "$1 ")).alias("seg"),
-    ).localCheckpoint()
 
-    rows = []
-    for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
-        # symbol array behind a projection barrier — indexing a
-        # materialized array, never re-splitting per pair index
-        sy = F.col("sy")
-        pair_arr = F.when(
-            F.size(sy) >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size(sy) - 2),
-                lambda i: F.concat(F.get(sy, i), F.lit(" "), F.get(sy, i + 1)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        cnt = (
-            seg.select("freq", F.split(F.col("seg"), " ").alias("sy"))
-            .select("freq", F.explode(pair_arr).alias("pair"))
-            .groupBy("pair")
-            .agg(F.sum("freq").alias("f"))
+    def _build():
+        docs = scale_partitions(load_table(spark, sf_dir, "documents"), spark)
+        vocab = (
+            docs.select(F.explode(tokens(F.col("text"))).alias("word"))
+            .groupBy("word")
+            .agg(F.count("*").alias("freq"))
         )
-        top = cnt.orderBy(F.desc("f"), F.asc("pair")).first()
-        if top is None:
-            # degenerate corpus (single-char vocabulary, or fully merged
-            # before the round budget is spent): stop with the merges
-            # learned so far rather than indexing a missing row
-            break
-        merged = top["pair"].replace(" ", "")
-        rows.append((rnd, top["pair"], merged, int(top["f"])))
-        seg = seg.withColumn(
-            "seg",
-            F.trim(
-                F.replace(
-                    F.concat(F.lit(" "), F.col("seg"), F.lit(" ")),
-                    F.lit(f" {top['pair']} "),
-                    F.lit(f" {merged} "),
-                )
-            ),
+        seg = vocab.select(
+            "word",
+            "freq",
+            F.trim(F.regexp_replace(F.col("word"), "(.)", "$1 ")).alias("seg"),
         ).localCheckpoint()
-    merges = spark.createDataFrame(
-        rows, "round long, pair string, merged string, freq long"
-    )
-    _BPE_FIT_MEMO[memo_key] = (merges, seg)
-    log_memo_build("bpe_fit", time.perf_counter() - _t0_build)
-    return _BPE_FIT_MEMO[memo_key]
+
+        rows = []
+        for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
+            # symbol array behind a projection barrier — indexing a
+            # materialized array, never re-splitting per pair index
+            sy = F.col("sy")
+            pair_arr = F.when(
+                F.size(sy) >= 2,
+                F.transform(
+                    F.sequence(F.lit(0), F.size(sy) - 2),
+                    lambda i: F.concat(F.get(sy, i), F.lit(" "), F.get(sy, i + 1)),
+                ),
+            ).otherwise(F.array().cast("array<string>"))
+            cnt = (
+                seg.select("freq", F.split(F.col("seg"), " ").alias("sy"))
+                .select("freq", F.explode(pair_arr).alias("pair"))
+                .groupBy("pair")
+                .agg(F.sum("freq").alias("f"))
+            )
+            top = cnt.orderBy(F.desc("f"), F.asc("pair")).first()
+            if top is None:
+                # degenerate corpus (single-char vocabulary, or fully merged
+                # before the round budget is spent): stop with the merges
+                # learned so far rather than indexing a missing row
+                break
+            merged = top["pair"].replace(" ", "")
+            rows.append((rnd, top["pair"], merged, int(top["f"])))
+            seg = seg.withColumn(
+                "seg",
+                F.trim(
+                    F.replace(
+                        F.concat(F.lit(" "), F.col("seg"), F.lit(" ")),
+                        F.lit(f" {top['pair']} "),
+                        F.lit(f" {merged} "),
+                    )
+                ),
+            ).localCheckpoint()
+        merges = spark.createDataFrame(
+            rows, "round long, pair string, merged string, freq long"
+        )
+        return merges, seg
+
+    return memo(spark, "bpe_fit", sf_dir, _build)
 
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1659,7 +1644,8 @@ def curation_run_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return memo_frame(
         spark,
-        ("curation_manifest", sf_dir),
+        "curation_manifest",
+        sf_dir,
         lambda: _build_curation_manifest(spark, sf_dir),
     )
 
@@ -1789,11 +1775,6 @@ PERC_BIAS_SLOT = FEATURE_HASH_DIM
 PERC_LEN_SLOT = FEATURE_HASH_DIM + 1
 PERC_DIM = FEATURE_HASH_DIM + 2
 
-#: (applicationId, sf_dir) → (per-round stats rows, per-round weight
-#: history) — the fitted model, shared by the train and eval reports.
-_PERC_FIT_MEMO: dict[tuple[str, str], tuple[list, list]] = register_memo({})
-
-
 def _perceptron_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized training table for the perceptron: one row per
     (doc, feature slot) with an integer feature value, the rule-battery
@@ -1823,7 +1804,7 @@ def _perceptron_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return feats.join(labels, "doc_id")
 
-    return memo_frame(spark, ("perc_features", sf_dir), build)
+    return memo_frame(spark, "perc_features", sf_dir, build)
 
 
 
@@ -1920,79 +1901,75 @@ def _perceptron_fit(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     stabilizer. A prediction's sign under the average equals its sign
     under the SUM of the per-round weight vectors (positive scaling), so
     the averaged model stays all-integer — no division ever happens."""
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PERC_FIT_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    _t0_build = time.perf_counter()
-    f = _perceptron_features(spark, sf_dir).filter(
-        F.col("split") == "train"
-    )
-    w = [0] * PERC_DIM
-    history: list[list[int]] = []
-    stats_rows: list[tuple] = []
-    rnd = 0
-    for epoch in range(1, PERC_EPOCHS + 1):
-        fb = f.withColumn("mb", _perc_batch_of(epoch))
-        for batch in range(PERC_BATCHES):
-            rnd += 1
-            w_lit = F.lit(w).cast("array<bigint>")
-            margins = (
-                fb.filter(F.col("mb") == batch)
-                .select(
-                    "doc_id",
-                    "y",
+
+    def _build():
+        f = _perceptron_features(spark, sf_dir).filter(
+            F.col("split") == "train"
+        )
+        w = [0] * PERC_DIM
+        history: list[list[int]] = []
+        stats_rows: list[tuple] = []
+        rnd = 0
+        for epoch in range(1, PERC_EPOCHS + 1):
+            fb = f.withColumn("mb", _perc_batch_of(epoch))
+            for batch in range(PERC_BATCHES):
+                rnd += 1
+                w_lit = F.lit(w).cast("array<bigint>")
+                margins = (
+                    fb.filter(F.col("mb") == batch)
+                    .select(
+                        "doc_id",
+                        "y",
+                        (
+                            F.element_at(w_lit, F.col("bucket") + 1)
+                            * F.col("cnt")
+                        ).alias("p"),
+                        "bucket",
+                        "cnt",
+                    )
+                    .groupBy("doc_id", "y")
+                    .agg(F.sum("p").cast("long").alias("margin"))
+                )
+                miscl = margins.filter(F.col("y") * F.col("margin") <= 0)
+                # BOUNDED collects (the BPE/k-means pattern): one stats row
+                # and one ≤PERC_DIM-row weight delta per round
+                n_batch, n_miscl = margins.agg(
+                    F.count("*").cast("long"),
+                    F.coalesce(
+                        F.sum(
+                            (F.col("y") * F.col("margin") <= 0).cast("int")
+                        ),
+                        F.lit(0),
+                    ).cast("long"),
+                ).collect()[0]
+                delta_rows = (
+                    fb.filter(F.col("mb") == batch)
+                    .join(miscl.select("doc_id"), "doc_id")
+                    .groupBy("bucket")
+                    .agg(
+                        F.sum(F.col("y") * F.col("cnt"))
+                        .cast("long")
+                        .alias("dw")
+                    )
+                    .collect()
+                )
+                for r in delta_rows:
+                    w[r.bucket] += r.dw
+                history.append(list(w))
+                stats_rows.append(
                     (
-                        F.element_at(w_lit, F.col("bucket") + 1)
-                        * F.col("cnt")
-                    ).alias("p"),
-                    "bucket",
-                    "cnt",
+                        rnd,
+                        epoch,
+                        batch,
+                        int(n_batch),
+                        int(n_miscl),
+                        sum(abs(x) for x in w),
+                        sum(1 for x in w if x != 0),
+                    )
                 )
-                .groupBy("doc_id", "y")
-                .agg(F.sum("p").cast("long").alias("margin"))
-            )
-            miscl = margins.filter(F.col("y") * F.col("margin") <= 0)
-            # BOUNDED collects (the BPE/k-means pattern): one stats row
-            # and one ≤PERC_DIM-row weight delta per round
-            n_batch, n_miscl = margins.agg(
-                F.count("*").cast("long"),
-                F.coalesce(
-                    F.sum(
-                        (F.col("y") * F.col("margin") <= 0).cast("int")
-                    ),
-                    F.lit(0),
-                ).cast("long"),
-            ).collect()[0]
-            delta_rows = (
-                fb.filter(F.col("mb") == batch)
-                .join(miscl.select("doc_id"), "doc_id")
-                .groupBy("bucket")
-                .agg(
-                    F.sum(F.col("y") * F.col("cnt"))
-                    .cast("long")
-                    .alias("dw")
-                )
-                .collect()
-            )
-            for r in delta_rows:
-                w[r.bucket] += r.dw
-            history.append(list(w))
-            stats_rows.append(
-                (
-                    rnd,
-                    epoch,
-                    batch,
-                    int(n_batch),
-                    int(n_miscl),
-                    sum(abs(x) for x in w),
-                    sum(1 for x in w if x != 0),
-                )
-            )
-    _PERC_FIT_MEMO[memo_key] = (stats_rows, history)
-    log_memo_build("perc_fit", time.perf_counter() - _t0_build)
-    return stats_rows, history
+        return stats_rows, history
+
+    return memo(spark, "perc_fit", sf_dir, _build)
 
 
 def perceptron_train_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2430,9 +2407,6 @@ def model_weight_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PERC_UPDATED_MEMO: dict[tuple[str, str], list] = register_memo({})
-
-
 def perceptron_updated_weights(spark: SparkSession, sf_dir: str) -> list:
     """The CANDIDATE model: served weights + the incremental round's
     deltas (``perceptron_incremental_update``'s ``w_after`` column),
@@ -2440,23 +2414,19 @@ def perceptron_updated_weights(spark: SparkSession, sf_dir: str) -> list:
     collect of the update ledger, the same class as the fit's own
     per-round collects. ONE accessor so the promotion report and any
     future consumer score the exact ledger the update entry publishes."""
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PERC_UPDATED_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    _t0_build = time.perf_counter()
-    rows = (
-        perceptron_incremental_update(spark, sf_dir)
-        .select("bucket", "w_after")
-        .collect()
-    )
-    w = [0] * PERC_DIM
-    for r in rows:
-        w[r["bucket"]] = r["w_after"]
-    _PERC_UPDATED_MEMO[memo_key] = w
-    log_memo_build("perc_updated", time.perf_counter() - _t0_build)
-    return w
+
+    def _build():
+        rows = (
+            perceptron_incremental_update(spark, sf_dir)
+            .select("bucket", "w_after")
+            .collect()
+        )
+        w = [0] * PERC_DIM
+        for r in rows:
+            w[r["bucket"]] = r["w_after"]
+        return w
+
+    return memo(spark, "perc_updated", sf_dir, _build)
 
 
 def model_promotion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2952,7 +2922,7 @@ def _preference_pairs_with_comps(
             dedup_components(spark, sf_dir).select("doc_id", "comp"),
         )
 
-    return memo_frame(spark, ("pref_pairs_comps", sf_dir), build)
+    return memo_frame(spark, "pref_pairs_comps", sf_dir, build)
 
 
 def _with_comps(pp: DataFrame, comps: DataFrame) -> DataFrame:
@@ -3427,7 +3397,7 @@ def _version_pref_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
             _repair_preference_pairs(_with_comps(pp_v, comps_v))
         )
 
-    return memo_frame(spark, ("version_pref_tagged", sf_dir), build)
+    return memo_frame(spark, "version_pref_tagged", sf_dir, build)
 
 
 def preference_version_delta(
@@ -3482,7 +3452,8 @@ def preference_version_delta(
     # the same memo treatment the v side already has
     tagged_v1 = memo_frame(
         spark,
-        ("pref_tagged_v1", sf_dir),
+        "pref_tagged_v1",
+        sf_dir,
         lambda: _margin_filter_tagged(
             preference_pair_repair_plan(spark, sf_dir)
         ),

@@ -35,7 +35,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from kafka_exercise_spark.catalog import evict_stale_memos, register_memo
+from kafka_exercise_spark.catalog import memo
 
 
 @dataclass
@@ -181,11 +181,6 @@ JOVENS_DAILY_ROLLUP = """
     GROUP BY dt_event, event_type
 """
 
-#: One drained lake + materialized rollup per (session, sf_dir) — like the
-#: manifest layout memo, the drain is a write-once artifact reruns share.
-_SERVING_LAKE_MEMO: dict = register_memo({})
-
-
 def serving_lake_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end S6 → S11: stream → parquet lake → BI rollup → SQL answer.
 
@@ -209,9 +204,7 @@ def serving_lake_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_exercise_spark.streaming.stateful import await_bounded
     from kafka_exercise_spark.streaming.tuning import bounded_replay_conf
 
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _SERVING_LAKE_MEMO:
+    def _build():
         src_dir, schema = land_events_replay(spark, sf_dir)
         work = tempfile.mkdtemp(prefix="serving_lake_")
         lake = os.path.join(work, "lake")
@@ -232,8 +225,9 @@ def serving_lake_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         layer.materialize(
             "jovens_daily", JOVENS_DAILY_ROLLUP, os.path.join(work, "rollup")
         )
-        _SERVING_LAKE_MEMO[memo_key] = layer
-    layer = _SERVING_LAKE_MEMO[memo_key]
+        return layer
+
+    layer = memo(spark, "serving_lake", sf_dir, _build)
     # the dashboard query: served from the rollup parquet, not the fact lake
     return layer.sql(
         "SELECT dt_event, event_type, n_events, n_users FROM jovens_daily"

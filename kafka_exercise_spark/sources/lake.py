@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kafka_exercise_spark.catalog import evict_stale_memos, register_memo
+from kafka_exercise_spark.catalog import memo, rm_parent_dir
 
 
 def write_partitioned(
@@ -362,18 +362,25 @@ def manifest_pruned_read(
     return frame.drop(cluster_col), len(dirs), total
 
 
-#: One z-clustered manifest layout per (session, sf_dir) — the layout is a
-#: write-once artifact every pruned read shares, like a served lake table.
-#: Registered with a tempdir cleanup: stale applications' landing dirs
-#: are removed on eviction, not leaked for the process lifetime.
-def _rm_landing_dir(path: str) -> None:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
+def manifest_layout(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the z-clustered, manifest-stamped ``events`` layout of
+    ``sf_dir``, written once and shared by every pruned read like a served
+    lake table; the landing dir is removed when the memo drops it."""
+    import os
+    import tempfile
 
-    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+    def _build():
+        # the SAME z-clustering plan the audit entry aggregates — shared
+        # helper, so the audited boxes always describe this layout
+        clustered = zorder_tiled_events(spark, sf_dir).select(
+            "event_id", "user_id", "event_type", "value", "ts_us", "tile"
+        )
+        path = os.path.join(tempfile.mkdtemp(prefix="manifest_lake_"), "events")
+        write_with_manifest(clustered, path, "tile", ["user_id", "ts_us"])
+        return path
 
+    return memo(spark, "manifest_layout", sf_dir, _build, cleanup=rm_parent_dir)
 
-_MANIFEST_LAYOUT_MEMO: dict = register_memo({}, cleanup=_rm_landing_dir)
 
 #: The contract query's 2-D range predicate: a user band × one week.
 SCAN_USER_RANGE = (30, 60)
@@ -394,35 +401,13 @@ def manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered table answers point/range queries without a scan: stats
     first, data second, correctness from the re-applied predicate.
     """
-    import os
-    import tempfile
-
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _MANIFEST_LAYOUT_MEMO:
-        # the SAME z-clustering plan the audit entry aggregates — shared
-        # helper, so the audited boxes always describe this layout
-        clustered = zorder_tiled_events(spark, sf_dir).select(
-            "event_id", "user_id", "event_type", "value", "ts_us", "tile"
-        )
-        path = os.path.join(tempfile.mkdtemp(prefix="manifest_lake_"), "events")
-        write_with_manifest(clustered, path, "tile", ["user_id", "ts_us"])
-        _MANIFEST_LAYOUT_MEMO[memo_key] = path
-    path = _MANIFEST_LAYOUT_MEMO[memo_key]
-
     frame, _read, _total = manifest_pruned_read(
         spark,
-        path,
+        manifest_layout(spark, sf_dir),
         "tile",
         {"user_id": SCAN_USER_RANGE, "ts_us": SCAN_TS_RANGE},
     )
     return frame.select("event_id", "user_id", "event_type", "value")
-
-
-#: JSONL landing dirs per (application, sf_dir) — write once, read many.
-_JSONL_MEMO: dict[tuple[str, str], str] = register_memo(
-    {}, cleanup=_rm_landing_dir
-)
 
 
 def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -446,17 +431,16 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_exercise_spark.catalog import load_table  # noqa: PLC0415
     from kafka_exercise_spark.functions.text import md5_hash64  # noqa: PLC0415
 
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    path = _JSONL_MEMO.get(memo_key)
-    if path is None:
+    def _build():
         path = os.path.join(tempfile.mkdtemp(prefix="jsonl_lake_"), "documents")
         (
             load_table(spark, sf_dir, "documents")
             .write.option("compression", "gzip")
             .json(path)
         )
-        _JSONL_MEMO[memo_key] = path
+        return path
+
+    path = memo(spark, "jsonl_roundtrip", sf_dir, _build, cleanup=rm_parent_dir)
     docs = load_table(spark, sf_dir, "documents")
     back = spark.read.schema(docs.schema).json(path)
     return back.select(

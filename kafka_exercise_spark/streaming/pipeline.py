@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from kafka_exercise_spark.catalog import evict_stale_memos, register_memo
+from kafka_exercise_spark.catalog import memo, rm_parent_dir
 from kafka_exercise_spark.operators.pipeline_ops import (
     custstream_pretty_transform,
     idadeclass_transform,
@@ -108,19 +108,6 @@ class PipelineManager:
 
 # ---- driver-contract entries (bounded, self-contained runs) ----
 
-#: One gated landing per (session, sf_dir) — write-once artifact reruns
-#: share, like the serving and manifest-layout memos.
-def _rm_work_parent(out: str) -> None:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    # value = <mkdtemp work>/<subdir> — remove the whole work dir
-    shutil.rmtree(os.path.dirname(out), ignore_errors=True)
-
-
-_DQ_GATE_MEMO: dict = register_memo({}, cleanup=_rm_work_parent)
-
-
 def streaming_idadecont_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CTAS idadecont topology run as a REAL streaming query over a
     bounded replay of ``events``, returning the final state.
@@ -201,9 +188,7 @@ def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _DQ_GATE_MEMO:
+    def _build():
         src_dir, schema = land_events_replay(spark, sf_dir)
         work = tempfile.mkdtemp(prefix="dq_gate_")
         out = os.path.join(work, "gated")
@@ -227,8 +212,9 @@ def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint=os.path.join(work, "ckpt"),
             foreach_batch=gate,
         )
-        _DQ_GATE_MEMO[memo_key] = out
-    out = _DQ_GATE_MEMO[memo_key]
+        return out
+
+    out = memo(spark, "dq_gate", sf_dir, _build, cleanup=rm_parent_dir)
 
     landed = spark.read.option("recursiveFileLookup", "true").parquet(out)
     return landed.groupBy("violations").agg(
@@ -263,18 +249,6 @@ def incremental_source_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rm_gate_dir(out: str) -> None:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    # out = <mkdtemp work>/gated — remove the whole work dir (src + ckpt
-    # + gated) when the owning application is gone
-    shutil.rmtree(os.path.dirname(out), ignore_errors=True)
-
-
-_CURATION_GATE_MEMO: dict = register_memo({}, cleanup=_rm_gate_dir)
-
-
 def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming curation admission control under REAL StreamExecution:
     documents replayed in micro-batches, each batch scored by the SHARED
@@ -298,9 +272,7 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_exercise_spark.streaming.sources import file_stream
     from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _CURATION_GATE_MEMO:
+    def _build():
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", "text"
         )
@@ -326,8 +298,9 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint=os.path.join(work, "ckpt"),
             foreach_batch=gate,
         )
-        _CURATION_GATE_MEMO[memo_key] = out
-    out = _CURATION_GATE_MEMO[memo_key]
+        return out
+
+    out = memo(spark, "curation_gate", sf_dir, _build, cleanup=rm_parent_dir)
 
     # plain partition discovery (NOT recursiveFileLookup, which disables
     # it): batch=<id>/routed=<decision> both come back as columns
@@ -344,9 +317,6 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "kept_ppm", F.expr("(n_kept * 1000000) div n_docs")
         )
     )
-
-
-_MERGE_REPLAY_MEMO: dict = register_memo({})
 
 
 def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,9 +361,7 @@ def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("last_eid").alias("eid"),
         )
 
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _MERGE_REPLAY_MEMO:
+    def _build():
         src_dir, schema = land_events_replay(spark, sf_dir)
         work = tempfile.mkdtemp(prefix="merge_replay_")
         store = os.path.join(work, "store")
@@ -485,11 +453,9 @@ def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
         shutil.rmtree(work, ignore_errors=True)
-        _MERGE_REPLAY_MEMO[memo_key] = final
-    return _MERGE_REPLAY_MEMO[memo_key]
+        return final
 
-
-_SCD2_REPLAY_MEMO: dict = register_memo({})
+    return memo(spark, "merge_replay", sf_dir, _build)
 
 
 def streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -521,9 +487,7 @@ def streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _SCD2_REPLAY_MEMO:
+    def _build():
         src_dir, schema = land_events_replay(spark, sf_dir)
         work = tempfile.mkdtemp(prefix="scd2_replay_")
         store = os.path.join(work, "staging")
@@ -623,11 +587,9 @@ def streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             target.join(staging, "user_id", "full_outer")
         ).localCheckpoint()
         shutil.rmtree(work, ignore_errors=True)
-        _SCD2_REPLAY_MEMO[memo_key] = final
-    return _SCD2_REPLAY_MEMO[memo_key]
+        return final
 
-
-_COMPACTION_REPLAY_MEMO: dict = register_memo({})
+    return memo(spark, "scd2_replay", sf_dir, _build)
 
 
 def streaming_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -680,9 +642,7 @@ def streaming_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _COMPACTION_REPLAY_MEMO:
+    def _build():
         src_dir, schema = land_events_replay(spark, sf_dir)
         work = tempfile.mkdtemp(prefix="compaction_replay_")
         store = os.path.join(work, "store")
@@ -752,12 +712,9 @@ def streaming_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
         shutil.rmtree(work, ignore_errors=True)
-        _COMPACTION_REPLAY_MEMO[memo_key] = final
-    return _COMPACTION_REPLAY_MEMO[memo_key]
+        return final
 
-
-#: Landed per-micro-batch model scores, keyed by (application, sf_dir).
-_MODEL_GATE_MEMO: dict = register_memo({})
+    return memo(spark, "compaction_replay", sf_dir, _build)
 
 
 def streaming_model_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -795,9 +752,7 @@ def streaming_model_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_bounded_replay,
     )
 
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _MODEL_GATE_MEMO:
+    def _build():
         w = perceptron_model_weights(spark, sf_dir)
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         work = tempfile.mkdtemp(prefix="model_gate_")
@@ -825,12 +780,9 @@ def streaming_model_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         final = spark.read.parquet(out).localCheckpoint()
         shutil.rmtree(work, ignore_errors=True)
-        _MODEL_GATE_MEMO[memo_key] = final
-    return _MODEL_GATE_MEMO[memo_key]
+        return final
 
-
-#: Landed per-micro-batch partial weight deltas, keyed by (app, sf_dir).
-_MODEL_UPDATE_MEMO: dict = register_memo({})
+    return memo(spark, "model_gate", sf_dir, _build)
 
 
 def streaming_model_update_replay(
@@ -875,9 +827,7 @@ def streaming_model_update_replay(
         run_bounded_replay,
     )
 
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _MODEL_UPDATE_MEMO:
+    def _build():
         w = perceptron_model_weights(spark, sf_dir)
         docs = (
             load_table(spark, sf_dir, "documents")
@@ -944,14 +894,9 @@ def streaming_model_update_replay(
             .localCheckpoint()
         )
         shutil.rmtree(work, ignore_errors=True)
-        _MODEL_UPDATE_MEMO[memo_key] = final
-    return _MODEL_UPDATE_MEMO[memo_key]
+        return final
 
-
-#: value = <mkdtemp work>/drawn — cleanup removes the whole workdir (the
-#: landed src/ copy of documents + checkpoint included), same contract as
-#: the other path-valued gate memos (ADVICE r9 #1).
-_SOFT_DRAW_MEMO: dict = register_memo({}, cleanup=_rm_work_parent)
+    return memo(spark, "model_update", sf_dir, _build)
 
 
 def streaming_soft_draw_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1005,9 +950,7 @@ def streaming_soft_draw_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_bounded_replay,
     )
 
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _SOFT_DRAW_MEMO:
+    def _build():
         comps = dedup_components(spark, sf_dir).select(
             "doc_id", "comp_size"
         )
@@ -1058,8 +1001,9 @@ def streaming_soft_draw_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint=os.path.join(work, "ckpt"),
             foreach_batch=admit,
         )
-        _SOFT_DRAW_MEMO[memo_key] = out
-    out = _SOFT_DRAW_MEMO[memo_key]
+        return out
+
+    out = memo(spark, "soft_draw", sf_dir, _build, cleanup=rm_parent_dir)
 
     landed = spark.read.parquet(out)
     kept = F.when(F.col("routed") == "keep", 1).otherwise(0)

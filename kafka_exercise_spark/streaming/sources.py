@@ -24,10 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-#: (sf_dir, n_files) -> (src_dir, schema). The landed replay input is
-#: immutable once written, so every bounded-replay entry in the session can
-#: read the same directory; only checkpoints must stay per-run fresh.
-_REPLAY_LANDINGS: dict[tuple[str, int], tuple[str, StructType]] = {}
+from kafka_exercise_spark.catalog import load_table, memo, rm_parent_dir
 
 
 def land_events_replay(
@@ -39,19 +36,24 @@ def land_events_replay(
     the events fixture to a stream-source directory. The write is the
     single most expensive fixed cost of a bounded replay, and the landed
     bytes are identical for every consumer — so land once per
-    (sf_dir, n_files) and share. Returns (src_dir, schema).
+    (sf_dir, n_files) and share; only checkpoints must stay per-run fresh.
+    The landing's temp dir is removed when the memo drops it. Returns
+    (src_dir, schema).
     """
-    key = (sf_dir, n_files)
-    if key not in _REPLAY_LANDINGS:
-        src = os.path.join(
-            tempfile.mkdtemp(prefix="events_replay_src_"), "src"
-        )
-        from kafka_exercise_spark.catalog import load_table
 
+    def _build():
+        src = os.path.join(tempfile.mkdtemp(prefix="events_replay_src_"), "src")
         events = load_table(spark, sf_dir, "events")
         events.repartition(n_files).write.mode("overwrite").parquet(src)
-        _REPLAY_LANDINGS[key] = (src, events.schema)
-    return _REPLAY_LANDINGS[key]
+        return src, events.schema
+
+    return memo(
+        spark,
+        f"events_replay_{n_files}",
+        sf_dir,
+        _build,
+        cleanup=lambda landed: rm_parent_dir(landed[0]),
+    )
 
 
 def file_stream(

@@ -33,11 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from kafka_exercise_spark.catalog import (
-    evict_stale_memos,
-    register_memo,
-    timed_build,
-)
+from kafka_exercise_spark.catalog import memo
 from kafka_exercise_spark.streaming.sources import file_stream, land_events_replay
 from kafka_exercise_spark.streaming.tuning import bounded_replay_conf
 
@@ -428,20 +424,15 @@ def streaming_neardup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus index is the long-lived side of admission control — built
     # by the SAME corpus_probe_sides the batch operator uses (index layout
     # can't drift) and pinned once per (session, sf_dir), like a served
-    # lake index (same memo contract as dedup._LSH_PAIRS_MEMO);
-    # scale_partitions parallelizes the shingle pass like the batch twin
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _NEARDUP_INDEX_MEMO:
+    # lake index; scale_partitions parallelizes the shingle pass like the
+    # batch twin
+    def _build():
+        bands, sets_ = corpus_probe_sides(
+            scale_partitions(docs.filter(~is_new), spark)
+        )
+        return (bands.localCheckpoint(), sets_.localCheckpoint())
 
-        def _build():
-            bands, sets_ = corpus_probe_sides(
-                scale_partitions(docs.filter(~is_new), spark)
-            )
-            return (bands.localCheckpoint(), sets_.localCheckpoint())
-
-        _NEARDUP_INDEX_MEMO[memo_key] = timed_build("neardup_index", _build)
-    old_bands, old_sets = _NEARDUP_INDEX_MEMO[memo_key]
+    old_bands, old_sets = memo(spark, "neardup_index", sf_dir, _build)
 
     work = tempfile.mkdtemp(prefix="neardup_replay_")
     src = os.path.join(work, "src")
@@ -506,22 +497,16 @@ def streaming_winnow_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     is_new = F.col("source") == INCREMENTAL_NEW_SOURCE
 
-    evict_stale_memos(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _WINNOW_INDEX_MEMO:
+    # the corpus winnow index (postings, per-doc counts, census domain)
+    def _build():
+        old_rare, old_counts, fp_domain = winnow_corpus_sides(spark, sf_dir)
+        return (
+            old_rare.localCheckpoint(),
+            old_counts.localCheckpoint(),
+            fp_domain.localCheckpoint(),
+        )
 
-        def _build():
-            old_rare, old_counts, fp_domain = winnow_corpus_sides(
-                spark, sf_dir
-            )
-            return (
-                old_rare.localCheckpoint(),
-                old_counts.localCheckpoint(),
-                fp_domain.localCheckpoint(),
-            )
-
-        _WINNOW_INDEX_MEMO[memo_key] = timed_build("winnow_index", _build)
-    old_rare, old_counts, fp_domain = _WINNOW_INDEX_MEMO[memo_key]
+    old_rare, old_counts, fp_domain = memo(spark, "winnow_index", sf_dir, _build)
 
     work = tempfile.mkdtemp(prefix="winnow_replay_")
     src = os.path.join(work, "src")
@@ -551,16 +536,6 @@ def streaming_winnow_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(work, ignore_errors=True)
     return result
 
-
-#: Materialized corpus LSH index for streaming admission control, keyed by
-#: (application, sf_dir) — the long-lived side of continuous ingest dedup.
-_NEARDUP_INDEX_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = register_memo({})
-
-#: Materialized corpus winnow index (postings, per-doc counts, census
-#: domain) for streaming admission control — same contract as above.
-_WINNOW_INDEX_MEMO: dict[
-    tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]
-] = register_memo({})
 
 #: output schema for the transformWithState distinct-type tracker
 _TWS_OUTPUT = "user_id bigint, n_event_types bigint"

@@ -235,15 +235,15 @@ def test_manifest_pruned_read_is_exact_and_prunes(spark, sf_dir, tmp_path):
 
 def test_manifest_zorder_scan_prunes_most_tiles(spark, sf_dir):
     from kafka_exercise_spark.sources.lake import (
-        _MANIFEST_LAYOUT_MEMO,
         SCAN_TS_RANGE,
         SCAN_USER_RANGE,
+        manifest_layout,
         manifest_pruned_read,
         manifest_pruned_scan,
     )
 
     manifest_pruned_scan(spark, sf_dir).count()  # builds + memoizes layout
-    path = _MANIFEST_LAYOUT_MEMO[(spark.sparkContext.applicationId, sf_dir)]
+    path = manifest_layout(spark, sf_dir)
     _, n_read, n_total = manifest_pruned_read(
         spark,
         path,

@@ -942,9 +942,7 @@ def test_pq_encode_codes_and_error_match_codebooks(spark, sf_dir):
     from kafka_exercise_spark.catalog import load_table
 
     out = {r.vec_id: r for r in similarity.pq_encode(spark, sf_dir).collect()}
-    books = similarity._PQ_CODEBOOKS[
-        (spark.sparkContext.applicationId, sf_dir)
-    ]
+    books = similarity.pq_books(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").limit(30).collect()
     for row in emb:
         ei = [
@@ -983,9 +981,7 @@ def test_ann_ivf_pq_adc_matches_codebook_math(spark, sf_dir):
 
     rows = similarity.ann_ivf_pq_topk(spark, sf_dir).collect()
     assert rows
-    books = similarity._PQ_CODEBOOKS[
-        (spark.sparkContext.applicationId, sf_dir)
-    ]
+    books = similarity.pq_books(spark, sf_dir)
     codes = {
         r.vec_id: (r.code0, r.code1, r.code2, r.code3)
         for r in similarity.pq_encode(spark, sf_dir).collect()
@@ -1139,7 +1135,7 @@ def test_bpe_segmentation_exact_on_hand_corpus(spark):
     try:
         t.load_table = lambda s, d, n: df
         # unique placeholder dir per hand frame: the merge-table memo is
-        # keyed on (app, sf_dir) — see catalog.memo_frame's contract
+        # keyed on (app, sf_dir) — see catalog.memo's contract
         (r,) = t.bpe_segment_words(spark, "hand-bpe-1").collect()
     finally:
         t.load_table = orig
