@@ -80,45 +80,14 @@ ARTIFACT = os.path.join(
 )
 
 
-def _run_once(
-    spark,
-    fn,
-    samples: list[float],
-    name: str | None = None,
-    cold_builds: dict | None = None,
-) -> None:
-    t0 = time.perf_counter()
-    try:
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        samples.append(time.perf_counter() - t0)
-    except Exception as e:  # noqa: BLE001
-        print(f"bench: query failed: {e}", file=sys.stderr)
-        samples.append(-1.0)
-    # Self-attribution (the SCALING build_s convention, applied to bench
-    # per VERDICT r9's recurring "cold parent build lands on whichever
-    # entry runs first" finding): any memoized family frame built INSIDE
-    # this sample is named with its cost under the query that paid it,
-    # so an inflated median in bench_results.json carries its own
-    # explanation instead of needing an order-isolated probe each round.
-    # Same nesting caveat as the ladder: an outer build's seconds include
-    # its inner builds' — read as "which frames were cold here".
-    builds = drain_memo_build_log()
-    if builds and cold_builds is not None and name is not None:
-        per = cold_builds.setdefault(name, {})
-        for c in builds:
-            per[c["memo"]] = round(per.get(c["memo"], 0.0) + c["seconds"], 3)
-
-
-def run() -> dict:
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = entrymod.queries()
-    # Warm-up: JVM/codegen, the parquet scan path, and one Python worker per
-    # core (pandas import + Arrow init) — measures queries the way a
-    # long-lived cluster runs them, not session cold-start.
+def warm_up(spark, sf_dir: str) -> None:
+    """JVM/codegen, the parquet scan path, and one Python worker per core
+    (pandas import + Arrow init) — measures queries the way a long-lived
+    cluster runs them, not session cold-start. Memo builds the warm-up
+    triggers are drained: they are nobody's attribution."""
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     try:
-        spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
+        spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
     except Exception:  # noqa: BLE001 — warm-up only
         pass
     (
@@ -129,6 +98,47 @@ def run() -> dict:
         .mode("overwrite")
         .save()
     )
+    drain_memo_build_log()
+
+
+def run_once(
+    spark,
+    fn,
+    sf_dir: str,
+    samples: list[float],
+    name: str,
+    cold_builds: dict,
+):
+    """Time one noop-sink run of ``fn`` into ``samples`` (-1.0 on failure)
+    and return the DataFrame it timed (None on failure)."""
+    t0 = time.perf_counter()
+    try:
+        df = fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        samples.append(time.perf_counter() - t0)
+    except Exception as e:  # noqa: BLE001
+        print(f"bench: query failed: {e}", file=sys.stderr)
+        samples.append(-1.0)
+        df = None
+    # Self-attribution (the SCALING build_s convention, applied to bench
+    # per VERDICT r9's recurring "cold parent build lands on whichever
+    # entry runs first" finding): any memoized family frame built INSIDE
+    # this sample is named with its cost under the query that paid it,
+    # so an inflated median in bench_results.json carries its own
+    # explanation instead of needing an order-isolated probe each round.
+    # Same nesting caveat as the ladder: an outer build's seconds include
+    # its inner builds' — read as "which frames were cold here".
+    for c in drain_memo_build_log():
+        per = cold_builds.setdefault(name, {})
+        per[c["memo"]] = round(per.get(c["memo"], 0.0) + c["seconds"], 3)
+    return df
+
+
+def run() -> dict:
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = entrymod.queries()
+    warm_up(spark, SF_DIR)
     # No separate per-query JIT-warm pass: with REPEATS >= 3 the first timed
     # pass carries the codegen/JIT cold cost for each shape and the MEDIAN
     # discards it ([cold, warm, warm] -> warm) — one fewer full sweep of
@@ -139,10 +149,9 @@ def run() -> dict:
     # the median still cancels host noise.
     samples: dict[str, list[float]] = {name: [] for name in queries}
     cold_builds: dict[str, dict[str, float]] = {}
-    drain_memo_build_log()  # warm-up builds are nobody's attribution
     for _ in range(REPEATS):
         for name, fn in queries.items():
-            _run_once(spark, fn, samples[name], name, cold_builds)
+            run_once(spark, fn, SF_DIR, samples[name], name, cold_builds)
     # Extra interleaved passes for the noise-dominated fast tail only —
     # cheap by construction (each added pass costs < FAST_CUTOFF per query).
     # THROUGHPUT_ANCHOR always gets the extra passes too: it is the sole
@@ -166,7 +175,7 @@ def run() -> dict:
         fast.append(THROUGHPUT_ANCHOR)
     for _ in range(FAST_REPEATS - REPEATS):
         for name in fast:
-            _run_once(spark, queries[name], samples[name], name, cold_builds)
+            run_once(spark, queries[name], SF_DIR, samples[name], name, cold_builds)
     timings = {
         name: round(statistics.median(ts), 4) if all(t >= 0 for t in ts) else -1.0
         for name, ts in samples.items()
@@ -184,7 +193,7 @@ def run() -> dict:
         # reads (production steady state), not replay build cost
         "memo_served": [n for n in MEMO_SERVED if n in timings],
         # which query paid each memoized family frame's cold build this
-        # run (artifact-only; see _run_once) — the set-order attribution
+        # run (artifact-only; see run_once) — the set-order attribution
         "cold_builds": cold_builds,
     }
     # Reference-comparable throughput. METRIC DEFINITION (pinned r6):

@@ -436,8 +436,9 @@ def simhash_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cost: the pair join ``dedup_simhash_pairs`` already pays (one
     fingerprint scan + one band self-join, candidate mass measured
-    exactly linear in corpus size — tools/detector_scale_probe.py), a
-    constant <=4-way explode of the O(pairs) survivor frame, and two
+    exactly linear in corpus size with tools/detector_scale_probe.py,
+    since removed: ``git show c974e43:tools/detector_scale_probe.py``),
+    a constant <=4-way explode of the O(pairs) survivor frame, and two
     |thresholds|-row aggregates. Thresholds with zero surviving pairs
     emit no row — identically in both engines (groupBy drops empty
     groups). Oracle mirrors the pair oracle's CTE chain at the sweep

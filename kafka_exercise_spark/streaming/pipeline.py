@@ -319,6 +319,22 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _version_before(store: str, batch_id: int) -> str:
+    """Latest on-disk version under the versioned ``store`` STRICTLY
+    before ``batch_id`` — so a re-delivered batch k always folds into k's
+    true predecessor, never into its own output (the idempotency the
+    merge/SCD2/compaction replays promise), and a restart resumes from
+    disk state rather than driver memory."""
+    import os  # noqa: PLC0415
+
+    prior = [
+        int(d[1:])
+        for d in os.listdir(store)
+        if d != "v_init" and d.startswith("v") and int(d[1:]) < batch_id
+    ]
+    return f"v{max(prior):04d}" if prior else "v_init"
+
+
 def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch MERGE (operators/merge.py) as a LIVE CDC apply under real
     StreamExecution: the pre-split profile table is the initial store,
@@ -377,19 +393,6 @@ def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         target.write.parquet(os.path.join(store, "v_init"))
 
-        def _version_before(batch_id: int) -> str:
-            """Latest on-disk store version STRICTLY before this batch —
-            so a re-delivered batch k always folds into k's true
-            predecessor, never into its own output (the idempotency the
-            docstring promises), and a restart resumes from disk state
-            rather than driver memory."""
-            prior = [
-                int(d[1:])
-                for d in os.listdir(store)
-                if d != "v_init" and d.startswith("v") and int(d[1:]) < batch_id
-            ]
-            return f"v{max(prior):04d}" if prior else "v_init"
-
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             b = profiles(
                 batch_df.where(F.unix_micros(F.col("ts")) >= MERGE_SPLIT_US)
@@ -401,7 +404,7 @@ def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("eid").alias("b_eid"),
             )
             prev = spark.read.parquet(
-                os.path.join(store, _version_before(batch_id))
+                os.path.join(store, _version_before(store, batch_id))
             )
             in_b = F.col("b_n").isNotNull()
             in_t = F.col("n").isNotNull()
@@ -438,7 +441,7 @@ def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         final = (
             spark.read.parquet(
-                os.path.join(store, _version_before(1 << 30))
+                os.path.join(store, _version_before(store, 1 << 30))
             )
             .select(
                 "user_id",
@@ -499,14 +502,6 @@ def streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         empty.write.parquet(os.path.join(store, "v_init"))
 
-        def _version_before(batch_id: int) -> str:
-            prior = [
-                int(d[1:])
-                for d in os.listdir(store)
-                if d != "v_init" and d.startswith("v") and int(d[1:]) < batch_id
-            ]
-            return f"v{max(prior):04d}" if prior else "v_init"
-
         def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
             b = _profiles(
                 batch_df.where(F.unix_micros(F.col("ts")) >= MERGE_SPLIT_US)
@@ -519,7 +514,7 @@ def streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("first_us").alias("b_fus"),
             )
             prev = spark.read.parquet(
-                os.path.join(store, _version_before(batch_id))
+                os.path.join(store, _version_before(store, batch_id))
             )
             in_b = F.col("b_n").isNotNull()
             in_p = F.col("n").isNotNull()
@@ -575,7 +570,7 @@ def streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("first_us").alias("t_first"),
         )
         staging = spark.read.parquet(
-            os.path.join(store, _version_before(1 << 30))
+            os.path.join(store, _version_before(store, 1 << 30))
         ).select(
             "user_id",
             F.col("n").alias("s_n"),
@@ -653,20 +648,12 @@ def streaming_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             " p string, us long, n long",
         ).write.parquet(os.path.join(store, "v_init"))
 
-        def _version_before(batch_id: int) -> str:
-            prior = [
-                int(d[1:])
-                for d in os.listdir(store)
-                if d != "v_init" and d.startswith("v") and int(d[1:]) < batch_id
-            ]
-            return f"v{max(prior):04d}" if prior else "v_init"
-
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             b = compact(batch_df).withColumnsRenamed(
                 {"eid": "b_eid", "v": "b_v", "p": "b_p", "us": "b_us", "n": "b_n"}
             )
             prev = spark.read.parquet(
-                os.path.join(store, _version_before(batch_id))
+                os.path.join(store, _version_before(store, batch_id))
             )
             in_b = F.col("b_n").isNotNull()
             in_t = F.col("n").isNotNull()
@@ -698,7 +685,7 @@ def streaming_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             foreach_batch=apply_batch,
         )
         final = (
-            spark.read.parquet(os.path.join(store, _version_before(1 << 30)))
+            spark.read.parquet(os.path.join(store, _version_before(store, 1 << 30)))
             .filter(F.col("v") >= TOMBSTONE_BELOW)
             .select(
                 "user_id",

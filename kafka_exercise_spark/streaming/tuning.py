@@ -22,15 +22,14 @@ any other query started in the same session meanwhile inherits them.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 BOUNDED_REPLAY_CONF = {
-    # 4 state partitions (r12, was 8; env-parameterized): a bounded
-    # replay's per-key state is MB-scale BY CONSTRUCTION — the profile
-    # exists for exactly that shape — so the fixed per-partition cost
+    # 4 state partitions (r12, was 8): a bounded replay's per-key state
+    # is MB-scale BY CONSTRUCTION — the profile exists for exactly that
+    # shape — so the fixed per-partition cost
     # (one store instance × every stateful operator × every micro-batch
     # commit) dominates over parallelism. ABAB-measured on the 5
     # stateful replays: warm walls at 4 ≤ 8 on every entry (join 3.0→2.0,
@@ -40,9 +39,7 @@ BOUNDED_REPLAY_CONF = {
     # a state-size-derived number, not a core-count tune: the same
     # bounded replay on a cluster wants the same small constant, and the
     # 24/7 path (PipelineManager) never enters this profile.
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_REPLAY_PARTITIONS", "4"
-    ),
+    "spark.sql.shuffle.partitions": "4",
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state."
         "HDFSBackedStateStoreProvider"

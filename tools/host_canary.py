@@ -1,27 +1,19 @@
-"""Host-quiescence canary (r11, VERDICT r10 ask #5).
+"""Host-quiescence canary: is the host steady enough to time on?
 
-The r10 README documented, as prose, that a timing probe launched
-right after a heavy multi-JVM sweep read ~2x inflated with rising
-samples, and the convention was "run on a quiet host; if samples trend
-upward, discard". This module puts that convention in code: a FIXED
-amount of single-threaded, Spark-free CPU work is timed ``CANARY_N``
-times immediately before a probe/ladder session, and the three numbers
-are committed into the session's JSON artifact — so a future
-adjudication of a suspicious rung carries its own host context instead
-of a README caveat.
+A FIXED amount of single-threaded, Spark-free CPU work is timed
+``CANARY_N`` times right before a timing session, and the samples go
+into that session's artifact, so a suspicious number carries its own
+host context. A timing run started right after a heavy multi-JVM sweep
+once read ~2x inflated with rising samples; that rising load is what
+the canary catches.
 
-Fixed work = a pure-Python FNV-style hash loop: deterministic
-(identical instruction stream every sample, no allocation growth), and
-single-threaded Python is maximally sensitive to exactly the
-contention being probed (scheduler pressure from a still-draining JVM
-or sibling build). Trend rule: strictly rising samples AND
-last/first > ``TREND_RATIO`` — a flat-but-slow host changes the
-absolute numbers the band judgment already tolerates; the canary's job
-is to catch the RISING-load case the r10 incident showed, where
-medians are not merely shifted but unstable. On a trending host the
-caller WARNS by default and refuses when
-``SPARK_GRAFT_CANARY_STRICT=1`` (the driver's batch runs keep going;
-an engineer timing by hand gets a hard stop).
+Fixed work = a pure-Python FNV-style hash loop: deterministic (identical
+instruction stream every sample, no allocation growth), and
+single-threaded Python is maximally sensitive to scheduler pressure from
+a still-draining JVM or sibling build. Trend rule: strictly rising
+samples AND last/first > ``TREND_RATIO`` — a flat-but-slow host only
+shifts the numbers. On a trending host the caller WARNS by default and
+refuses when ``SPARK_GRAFT_CANARY_STRICT=1``.
 """
 
 from __future__ import annotations

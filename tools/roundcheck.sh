@@ -23,6 +23,7 @@ stage "oracle sweep sf0.1 (scale-robustness)"
 python tools/verify_local.py /root/testdata/sf0.1 | tail -3 || fail=1
 
 stage "bench (writes bench_results.json; compare vs BENCH_r*.json)"
+python -c "from tools.host_canary import gate_or_warn; gate_or_warn('bench')" || fail=1
 python bench.py | tail -1 || fail=1
 
 stage "plan report (rewrites PLANS.md; diff before committing)"

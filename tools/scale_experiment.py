@@ -25,16 +25,18 @@ format is identical and ratios measure data volume only.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bench import run_once, warm_up
 from kafka_exercise_spark.catalog import (
     TABLES,
     drain_memo_build_log,
@@ -66,37 +68,33 @@ QUERIES = {
     "quality_repetition": textops.quality_repetition,
     "idadecont": pipeline_ops.idadecont,
     "dedup_minhash_lsh": dedup.dedup_minhash_lsh,
-    # the union-find contraction gets its OWN rung (memo-served since
-    # late r8): consumers below (soft weights / weighted budget / the
-    # preference audit / export capstone) then time their marginal cost
+    # the union-find contraction gets its OWN rung (memo-served): its
+    # consumers below then time their marginal cost
     "dedup_components": dedup.dedup_components,
     "session_window_events": analytic.session_window_events,
-    # r03 additions — one per new plan family
     "token_budget_select": sampling.token_budget_select,  # per-lang window fill
     "chunk_documents": textops.chunk_documents,  # map-only ×(C/S) fan-out
     "zorder_events": lake.zorder_events,  # scan + tiny per-tile agg
-    # r04 additions — inverted-index retrieval and sketch+recount families
     "bm25_topk": similarity.bm25_topk,  # postings join on shared terms
     "heavy_hitters_topk": textops.heavy_hitters_topk,  # MG sketch + recount
-    # late-r04 additions — iterative graph, conditional LM, grid fan-out
     "graph_pagerank": graph.graph_pagerank,  # per-iter join+groupBy
     "lm_bigram_score": textops.lm_bigram_score,  # bigram vocab grows w/ corpus
     "resample_ffill_events": analytic.resample_ffill_events,  # span-bounded grid
     # pair-join families over the replicated customer/lineitem tables
     "er_fuzzy_pairs": entityres.er_fuzzy_pairs,  # delete-1 blocked join
     "basket_pair_rules": market.basket_pair_rules,  # within-basket pairs
-    # r05 additions — char-fingerprint posting join; iterative vocab fit
-    # (winnow fingerprints are disjoint across copies via the vocabulary
-    # rename, so pair structure replicates linearly; the BPE trainer's
-    # per-round cost tracks the ×k vocabulary, never the corpus)
+    # char-fingerprint posting join; iterative vocab fit (winnow
+    # fingerprints are disjoint across copies via the vocabulary rename, so
+    # pair structure replicates linearly; the BPE trainer's per-round cost
+    # tracks the ×k vocabulary, never the corpus)
     "winnowing_overlap_pairs": dedup.winnowing_overlap_pairs,
     "bpe_train_merges": textops.bpe_train_merges,
-    # r06 additions — the composition/meta operators (VERDICT r5 #5): each
-    # claims "memoized family frames + small aggregates" as its marginal
-    # cost. They run AFTER their source families above, so the per-dir
-    # memos those entries warmed are in place and the rung times the
-    # composition itself (plus any family only the composite builds —
-    # e.g. the detector matrix's simhash side — which is its real cost).
+    # the composition/meta operators: each claims "memoized family frames +
+    # small aggregates" as its marginal cost. They run AFTER their source
+    # families above, so the per-dir memos those entries warmed are in place
+    # and the rung times the composition itself (plus any family only the
+    # composite builds — e.g. the detector matrix's simhash side — which is
+    # its real cost).
     "dedup_detector_matrix": dedup.dedup_detector_matrix,
     "dedup_savings_report": dedup.dedup_savings_report,
     "split_leakage_report": dedup.split_leakage_report,
@@ -104,47 +102,45 @@ QUERIES = {
     # every variant's index/scan cost is per-(query,candidate), queries a
     # fixed panel — linear rungs mean no hidden all-pairs in the family
     "ann_recall_report": similarity.ann_recall_report,
-    # this round's capstone composition (gate + survivors + split + mix)
+    # the capstone composition (gate + survivors + split + mix)
     "curation_run_manifest": textops.curation_run_manifest,
-    # late-r06 additions: the winnow admission probe (batch × corpus
-    # posting join — the incremental shape) and the iterative perceptron
-    # fit (per-round cost = one aggregate over the ×k feature table; the
-    # round count is FIXED, so wall should track k, never k²)
+    # the winnow admission probe (batch × corpus posting join — the
+    # incremental shape) and the iterative perceptron fit (per-round cost =
+    # one aggregate over the ×k feature table; the round count is FIXED, so
+    # wall should track k, never k²)
     "winnow_incremental": dedup.winnow_incremental,
     "perceptron_train_rounds": textops.perceptron_train_rounds,
-    # r07 additions — the model-vs-rules sheets. They run AFTER the fit
-    # (perceptron_train_rounds) and the manifest above, so their rungs
-    # time the marginal composition cost each claims: one labels join +
-    # a (split, source) groupBy; a constant 9-way fan-out groupBy; one
-    # doc-keyed join over two served frames.
+    # the model-vs-rules sheets run AFTER the fit (perceptron_train_rounds)
+    # and the manifest above, so their rungs time the marginal composition
+    # cost each claims: one labels join + a (split, source) groupBy; a
+    # constant 9-way fan-out groupBy; one doc-keyed join over two served
+    # frames.
     "model_rule_disagreement_report": textops.model_rule_disagreement_report,
     "model_gate_threshold_sweep": textops.model_gate_threshold_sweep,
     "curation_manifest_model_gate": textops.curation_manifest_model_gate,
-    # r08 additions — the weighted-selection capstone (draw map-side +
-    # one per-source window over the survivor set; runs AFTER the dedup
-    # families so the component memo is warm and the rung times the
-    # selection itself) and the two online-model audit sheets (one
-    # feature-table aggregate each + a (split, source)/(split) groupBy;
-    # after the fit like the r07 sheets).
+    # the weighted-selection capstone (draw map-side + one per-source window
+    # over the survivor set; runs AFTER the dedup families so the component
+    # memo is warm and the rung times the selection itself) and the two
+    # online-model audit sheets (one feature-table aggregate each + a
+    # (split, source)/(split) groupBy; after the fit like the sheets above).
     "token_budget_weighted": sampling.token_budget_weighted,
     "model_promotion_report": textops.model_promotion_report,
     "model_batch_drift_report": textops.model_batch_drift_report,
-    # late-r08 additions — pure compositions over memo-served frames
-    # (run after their parents above, so the rung times the marginal
-    # join/aggregate each claims): BOTH deploy-impact matrices and the
-    # per-doc leakage repair plan (same tiers as split_leakage_report).
+    # pure compositions over memo-served frames (run after their parents
+    # above, so the rung times the marginal join/aggregate each claims):
+    # BOTH deploy-impact matrices and the per-doc leakage repair plan (same
+    # tiers as split_leakage_report).
     "model_gate_impact_matrix": textops.model_gate_impact_matrix,
     "model_replace_impact_matrix": textops.model_replace_impact_matrix,
     "split_repair_plan": dedup.split_repair_plan,
-    # late-r08 training-data construction sheets: two map+agg layout
-    # sheets (scan-bound — should track corpus size exactly), their
-    # 2-row decision composition, the map-only FIM plan, the per-lang
-    # mirror pairing (classifier shuffle + lang window — the window's
-    # per-lang task grows ×k, the shape the two-level shard extension
-    # addresses at real scale), and the pool-bounded contrastive miner
-    # (|queries|×TOP_K candidates — should be FLAT, not linear: the
-    # pool, not the corpus, is the cost driver; only the memoized
-    # index build underneath tracks k).
+    # training-data construction sheets: two map+agg layout sheets
+    # (scan-bound — should track corpus size exactly), their 2-row decision
+    # composition, the map-only FIM plan, the per-lang mirror pairing
+    # (classifier shuffle + lang window — the window's per-lang task grows
+    # ×k, the shape the two-level shard extension addresses at real scale),
+    # and the pool-bounded contrastive miner (|queries|×TOP_K candidates —
+    # should be FLAT, not linear: the pool, not the corpus, is the cost
+    # driver; only the memoized index build underneath tracks k).
     "length_bucket_plan": sampling.length_bucket_plan,
     "output_shard_manifest": sampling.output_shard_manifest,
     "packing_vs_bucketing_report": sampling.packing_vs_bucketing_report,
@@ -160,27 +156,26 @@ QUERIES = {
     "dedup_semantic": similarity.dedup_semantic,
     "hard_negatives_topk": similarity.hard_negatives_topk,
     # the preference audit and export capstone run AFTER their parents
-    # (classifier/components; weighted selection) — marginal-join rungs.
-    # Added post-SCALING_r08; first rings lead the r9 ladder.
+    # (classifier/components; weighted selection) — marginal-join rungs
     "preference_pair_dedup_audit": textops.preference_pair_dedup_audit,
     "export_shard_manifest": sampling.export_shard_manifest,
-    # r09 additions — pure compositions (run after their parents above):
-    # the per-shard raw-vs-selected manifest diff and the preference
-    # repair plan (audit-joined frame + an O(poisoned) re-pair window)
+    # pure compositions (run after their parents above): the per-shard
+    # raw-vs-selected manifest diff and the preference repair plan
+    # (audit-joined frame + an O(poisoned) re-pair window)
     "curation_export_delta": sampling.curation_export_delta,
     "preference_pair_repair_plan": textops.preference_pair_repair_plan,
-    # late-r09 additions: the simhash cutoff sweep (one pass over the
-    # banded pair plan at d<=3 — candidate mass measured exactly linear,
-    # tools/detector_scale_probe.py) and the DPO margin histogram (the
-    # pairing's plan + a |bands|-row groupBy)
+    # the simhash cutoff sweep (one pass over the banded pair plan at d<=3 —
+    # candidate mass measured exactly linear with
+    # tools/detector_scale_probe.py, since removed: `git show
+    # c974e43:tools/detector_scale_probe.py`) and the DPO margin histogram
+    # (the pairing's plan + a |bands|-row groupBy)
     "simhash_threshold_sweep": dedup.simhash_threshold_sweep,
     "preference_margin_histogram": textops.preference_margin_histogram,
     # bucketed-layout manifest: scan-bound like its economics sheet
     "bucket_batch_manifest": sampling.bucket_batch_manifest,
-    # r10 additions: the bucketed layout's selected-corpus twin + delta
-    # (compositions over the selection and the two bucket manifests)
-    # and the DPO filtered-export capstone (repair plan + two |langs|-row
-    # aggregates)
+    # the bucketed layout's selected-corpus twin + delta (compositions over
+    # the selection and the two bucket manifests) and the DPO
+    # filtered-export capstone (repair plan + two |langs|-row aggregates)
     "bucket_export_manifest": sampling.bucket_export_manifest,
     "bucket_export_delta": sampling.bucket_export_delta,
     "preference_filtered_export": textops.preference_filtered_export,
@@ -189,33 +184,33 @@ QUERIES = {
     "packing_vs_bucketing_selected_report": (
         sampling.packing_vs_bucketing_selected_report
     ),
-    # r11 additions: the DPO writer manifest (repair plan + broadcast
-    # cuts + one (lang, shard) groupBy) and the cross-version export
-    # delta (the v-side re-selection — filtered pairs, re-contraction,
-    # re-budget — plus ≤8-row folds; its rung prices the v-side rerun,
-    # the v+1 side is the warm selection memo)
+    # the DPO writer manifest (repair plan + broadcast cuts + one (lang,
+    # shard) groupBy) and the cross-version export delta (the v-side
+    # re-selection — filtered pairs, re-contraction, re-budget — plus ≤8-row
+    # folds; its rung prices the v-side rerun, the v+1 side is the warm
+    # selection memo)
     "preference_export_manifest": textops.preference_export_manifest,
     "export_version_delta": sampling.export_version_delta,
     # the bucketed twin rides the same memo-served selections: its rung
     # prices the bucket folds + joins alone (the shard delta above pays
     # the v-side rerun in the same chunk)
     "bucket_version_delta": sampling.bucket_version_delta,
-    # late r11: the DPO export's cross-version delta — its rung prices
-    # the v-side rerun (scores anti-join, re-pairing, re-contraction on
-    # the filtered pair list) plus the |langs|-row folds; the v+1 side
-    # is the warm pref_pairs_comps memo built by the repair plan timed
-    # earlier in the preference chunk
+    # the DPO export's cross-version delta — its rung prices the v-side
+    # rerun (scores anti-join, re-pairing, re-contraction on the filtered
+    # pair list) plus the |langs|-row folds; the v+1 side is the warm
+    # pref_pairs_comps memo built by the repair plan timed earlier in the
+    # preference chunk
     "preference_version_delta": textops.preference_version_delta,
 }
 
-#: Fresh-session ladder chunks (r10, VERDICT r9 ask #3). The single-JVM
-#: full ladder accumulates ~45 queries x 3 dirs of checkpointed memo
-#: frames in one heap; by the late rungs that session state inflated
-#: sub-linear builds ~2x (dedup_detector_matrix x8: 14.6 s in-ladder vs
-#: 6.96 s fresh — adjudicated r9 with work counters,
-#: tools/detector_scale_probe.py). Chunking runs each family group in
-#: its OWN subprocess/JVM so committed rung numbers ARE the
-#: fresh-session numbers and need no per-round adjudication essay.
+#: Fresh-session ladder chunks. The single-JVM full ladder accumulates
+#: ~45 queries x 3 dirs of checkpointed memo frames in one heap; by the
+#: late rungs that session state inflated sub-linear builds ~2x
+#: (dedup_detector_matrix x8: 14.6 s in-ladder vs 6.96 s fresh, measured
+#: with tools/detector_scale_probe.py, since removed: `git show
+#: c974e43:tools/detector_scale_probe.py`). Chunking runs each family
+#: group in its OWN subprocess/JVM so committed rung numbers ARE the
+#: fresh-session numbers.
 #:
 #: Each chunk lists `warm`: parent entries run UNTIMED on every rung
 #: dir before the chunk's timed loop, so marginal-cost entries keep
@@ -254,8 +249,7 @@ CHUNKS: tuple[dict, ...] = (
     },
     {
         # detector matrix times the tier_pairs composition with the
-        # winnow side warm — the exact protocol of the r9 fresh-session
-        # adjudication ("parents warmed as the ladder leaves them")
+        # winnow side warm ("parents warmed as the ladder leaves them")
         "name": "dedup-core",
         "warm": ["winnowing_overlap_pairs"],
         "timed": [
@@ -352,11 +346,16 @@ def build_scaled(spark, k: int) -> str:
         shutil.rmtree(out)
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
+
+    def _write(table: str, copies: list) -> None:
+        union = functools.reduce(DataFrame.unionByName, copies)
+        union.write.parquet(os.path.join(out, f"{table}.parquet"))
+
     ev = load_table(spark, BASE, "events")
     n_ev = ev.count()
     docs = load_table(spark, BASE, "documents")
     n_docs = docs.count()
-    ev_parts = [
+    _write("events", [
         ev.select(
             (F.col("event_id") + F.lit(i * n_ev)).alias("event_id"),
             (F.col("ts") + F.make_interval(days=F.lit(i))).alias("ts"),
@@ -366,11 +365,7 @@ def build_scaled(spark, k: int) -> str:
             "props",
         )
         for i in range(k)
-    ]
-    ev_k = ev_parts[0]
-    for p in ev_parts[1:]:
-        ev_k = ev_k.unionByName(p)
-    ev_k.write.parquet(os.path.join(out, "events.parquet"))
+    ])
     # Per-copy VOCABULARY RENAME: every word w becomes "w<tag>", a
     # bijection on the token vocabulary. Within a copy the shingle-overlap
     # structure is exactly the original corpus's (renames preserve set
@@ -384,7 +379,7 @@ def build_scaled(spark, k: int) -> str:
     def _tagged(i: int) -> F.Column:
         return F.regexp_replace(F.col("text"), r"(\S+)", f"$1u{i}")
 
-    doc_parts = [
+    _write("documents", [
         docs.select(
             (F.col("doc_id") + F.lit(i * n_docs)).alias("doc_id"),
             "source",
@@ -402,11 +397,7 @@ def build_scaled(spark, k: int) -> str:
             ],
         )
         for i in range(k)
-    ]
-    doc_k = doc_parts[0]
-    for p in doc_parts[1:]:
-        doc_k = doc_k.unionByName(p)
-    doc_k.write.parquet(os.path.join(out, "documents.parquet"))
+    ])
     # customer ×k for the ER family: per-copy 2-char name prefix with
     # pairwise prefix distance 2 ("aa", "bb", …), so NO cross-copy pair is
     # within Levenshtein 1 — the distance-1 pair structure (what the
@@ -414,7 +405,7 @@ def build_scaled(spark, k: int) -> str:
     # same design argument as the documents vocabulary rename
     cust = load_table(spark, BASE, "customer")
     n_cust = cust.count()
-    cust_parts = [
+    _write("customer", [
         cust.select(
             (F.col("c_custkey") + F.lit(i * 10 * n_cust)).alias("c_custkey"),
             F.concat(F.lit(chr(ord("a") + i) * 2), F.col("c_name")).alias(
@@ -423,28 +414,20 @@ def build_scaled(spark, k: int) -> str:
             *[c for c in cust.columns if c not in ("c_custkey", "c_name")],
         )
         for i in range(k)
-    ]
-    cust_k = cust_parts[0]
-    for p in cust_parts[1:]:
-        cust_k = cust_k.unionByName(p)
-    cust_k.write.parquet(os.path.join(out, "customer.parquet"))
+    ])
     # lineitem ×k for the basket family: baskets must never merge across
     # copies (orderkey offset); parts stay shared — pair SUPPORT grows k×
     # (linear counts on a fixed pair domain), candidate generation stays
     # Σ|basket|² per copy
     li = load_table(spark, BASE, "lineitem")
     max_ok = li.agg(F.max("l_orderkey")).collect()[0][0] + 1
-    li_parts = [
+    _write("lineitem", [
         li.select(
             (F.col("l_orderkey") + F.lit(i * max_ok)).alias("l_orderkey"),
             *[c for c in li.columns if c != "l_orderkey"],
         )
         for i in range(k)
-    ]
-    li_k = li_parts[0]
-    for p in li_parts[1:]:
-        li_k = li_k.unionByName(p)
-    li_k.write.parquet(os.path.join(out, "lineitem.parquet"))
+    ])
     # embeddings ×k for the ANN family: vec_id offset keeps ids unique;
     # vectors replicate UNPERTURBED — retrieval cost is per
     # (query, candidate) with a FIXED query panel (vec_id < N_QUERIES
@@ -453,17 +436,13 @@ def build_scaled(spark, k: int) -> str:
     # the rung asks. No pair structure exists to densify quadratically.
     emb = load_table(spark, BASE, "embeddings")
     n_emb = emb.count()
-    emb_parts = [
+    _write("embeddings", [
         emb.select(
             (F.col("vec_id") + F.lit(i * n_emb)).alias("vec_id"),
             *[c for c in emb.columns if c != "vec_id"],
         )
         for i in range(k)
-    ]
-    emb_k = emb_parts[0]
-    for p in emb_parts[1:]:
-        emb_k = emb_k.unionByName(p)
-    emb_k.write.parquet(os.path.join(out, "embeddings.parquet"))
+    ])
     _scaled = ("events", "documents", "customer", "lineitem", "embeddings")
     for t in TABLES:
         src = table_path(BASE, t)
@@ -477,16 +456,10 @@ def build_scaled(spark, k: int) -> str:
 
 def run_chunked() -> None:
     """Run the ladder as one fresh subprocess/JVM per CHUNKS entry and
-    print the merged JSON — the committed-artifact form since r10 (see
-    the CHUNKS docstring for why). Chunk boundaries and warm lists keep
-    every rung's semantics identical to the old single-session ladder;
-    only the accumulated-heap distortion is removed.
-
-    Leads with the host-quiescence canary (r11, VERDICT r10 ask #5):
-    three fixed-work samples committed into the artifact under
-    ``host_canary``, so every SCALING_r{N}.json carries its own host
-    context — a rung adjudication no longer depends on a README
-    caveat about when the ladder was launched."""
+    print the merged JSON, led by the host canary (committed into the
+    artifact under ``host_canary``). Chunk boundaries and warm lists keep
+    every rung's semantics identical to a single-session ladder; only the
+    accumulated-heap distortion is removed (see CHUNKS)."""
     import subprocess  # noqa: PLC0415
 
     from tools.host_canary import gate_or_warn  # noqa: PLC0415
@@ -512,11 +485,9 @@ def run_chunked() -> None:
             raise SystemExit(
                 f"chunk {chunk['name']} failed (rc={proc.returncode})"
             )
-        # the child exits 0 but its stdout may be polluted (Spark/Ivy
-        # banners land on stdout on some configs) or — pathologically —
-        # empty: scan BACKWARDS for the last parseable JSON object so a
-        # stray trailing line cannot sink the whole ladder, and name the
-        # chunk when nothing parses (r10 ADVICE item)
+        # the child's stdout may carry Spark/Ivy banners or, pathologically,
+        # nothing: take the LAST parseable JSON line, so a stray trailing
+        # line cannot sink the ladder, and name the chunk when none parses
         part = None
         for line in reversed(proc.stdout.strip().splitlines()):
             try:
@@ -539,39 +510,30 @@ def run_chunked() -> None:
     print(json.dumps(out))
 
 
+def _ladder_names(var: str) -> list[str]:
+    """The comma-separated ladder entries named by env var ``var``."""
+    names = [x.strip() for x in os.environ.get(var, "").split(",") if x.strip()]
+    unknown = set(names) - set(QUERIES)
+    if unknown:
+        raise SystemExit(f"{var} names not in the ladder: {sorted(unknown)}")
+    return names
+
+
 def main() -> None:
     spark = get_spark("scale_experiment")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm JVM
-    # warm each query SHAPE on the tiny fixture: codegen/JIT are
-    # scale-independent, and per-dir memos (localCheckpoint) stay cold for
-    # the timed dirs — so timings below measure data volume, not compilation
+    # warm the session, then each query SHAPE on the tiny fixture:
+    # codegen/JIT are scale-independent, and per-dir memos
+    # (localCheckpoint) stay cold for the timed dirs — so timings below
+    # measure data volume, not compilation
     warm = "/root/testdata/sf0.01"
-    only = os.environ.get("SPARK_GRAFT_SCALE_ONLY")
-    queries = QUERIES
-    if only:
-        wanted = {x.strip() for x in only.split(",")}
-        unknown = wanted - set(QUERIES)
-        if unknown:
-            raise SystemExit(
-                f"SPARK_GRAFT_SCALE_ONLY names not in the ladder: "
-                f"{sorted(unknown)} (known: {sorted(QUERIES)})"
-            )
-        queries = {k: v for k, v in QUERIES.items() if k in wanted}
+    warm_up(spark, warm)
+    only = _ladder_names("SPARK_GRAFT_SCALE_ONLY")
+    queries = {k: v for k, v in QUERIES.items() if k in only} if only else QUERIES
     # untimed per-dir parents (chunked mode): run on every rung dir
     # BEFORE the timed loop so marginal-cost entries find their memo
     # parents warm, exactly as the full single-session ladder left them
-    warm_parents = [
-        x.strip()
-        for x in os.environ.get("SPARK_GRAFT_SCALE_WARM", "").split(",")
-        if x.strip()
-    ]
-    unknown_warm = set(warm_parents) - set(QUERIES)
-    if unknown_warm:
-        raise SystemExit(
-            f"SPARK_GRAFT_SCALE_WARM names not in the ladder: "
-            f"{sorted(unknown_warm)}"
-        )
+    warm_parents = _ladder_names("SPARK_GRAFT_SCALE_WARM")
     for n in warm_parents:
         QUERIES[n](spark, warm).write.format("noop").mode("overwrite").save()
     for fn in queries.values():
@@ -584,41 +546,26 @@ def main() -> None:
         int(x)
         for x in os.environ.get("SPARK_GRAFT_SCALE_RUNGS", "1,4,8").split(",")
     )
-    # `queries` already honors SPARK_GRAFT_SCALE_ONLY (comma-separated
-    # names, registry order preserved): re-rung one family without
-    # paying the full ladder. Families that time a MARGINAL cost still
-    # need their memo parents listed first.
     dirs = {k: build_scaled(spark, k) for k in rungs}
     for d in dirs.values():
         for n in warm_parents:
-            QUERIES[n](spark, d).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            QUERIES[n](spark, d).write.format("noop").mode("overwrite").save()
     results: dict[str, dict] = {}
     drain_memo_build_log()  # warm-phase builds are not rung evidence
     for name, fn in queries.items():
         results[name] = {}
+        # bench.run_once's self-attribution (the SCALING_r08 lesson):
+        # every cold memo built INSIDE a timed rung is named with its
+        # build cost under that rung, so a super-linear-looking rung
+        # carries its own explanation — "first entry to touch the shared
+        # frame on this dir". Builds NEST (lsh_pairs calls
+        # hashed_shingles): read build_s as "which frames were cold here",
+        # never as a sum.
         builds: dict[str, dict[str, float]] = {}
         for k, d in dirs.items():
-            t0 = time.perf_counter()
-            fn(spark, d).write.format("noop").mode("overwrite").save()
-            results[name][f"x{k}"] = round(time.perf_counter() - t0, 3)
-            # self-attribution (the SCALING_r08 lesson): every cold memo
-            # built INSIDE this timed run is named with its build cost,
-            # so a super-linear-looking rung carries its own explanation
-            # — "first entry to touch the shared frame on this dir".
-            # Caveat: builds NEST (lsh_pairs calls hashed_shingles), and
-            # an outer build's seconds INCLUDE its inner builds' — sum
-            # the build_s map and you double-count; read it as "which
-            # frames were cold here and what did each cost end-to-end".
-            cold = drain_memo_build_log()
-            if cold:
-                per = {}
-                for c in cold:
-                    per[c["memo"]] = round(
-                        per.get(c["memo"], 0.0) + c["seconds"], 3
-                    )
-                builds[f"x{k}"] = per
+            t: list[float] = []
+            run_once(spark, fn, d, t, f"x{k}", builds)
+            results[name][f"x{k}"] = round(t[0], 3)
         if builds:
             results[name]["build_s"] = builds
     print(json.dumps(results))
