@@ -23,6 +23,8 @@ import subprocess
 import sys
 import textwrap
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: Window/cumsum/draw-heavy entries — the partitioning-sensitive shapes.
 ENTRIES = (
     "global_shuffle",
@@ -34,7 +36,7 @@ ENTRIES = (
 _SUBPROC_SCRIPT = textwrap.dedent(
     """
     import json, sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, sys.argv[2])
     from tests.test_parallelism_independence import digest_entries
     print("DIGESTS:" + json.dumps(digest_entries(sf_dir=sys.argv[1])))
     """
@@ -65,7 +67,7 @@ def test_results_identical_across_thread_counts(spark, sf_dir):
     # can't collide with the fixture session's
     env["SPARK_GRAFT_WAREHOUSE"] = "/tmp/spark_graft_wh_par_fence"
     proc = subprocess.run(
-        [sys.executable, "-c", _SUBPROC_SCRIPT, sf_dir],
+        [sys.executable, "-c", _SUBPROC_SCRIPT, sf_dir, ROOT],
         capture_output=True,
         text=True,
         timeout=480,

@@ -9,6 +9,7 @@ the incremental timestamp-mode source's capture semantics.
 
 from __future__ import annotations
 
+import datetime as dt
 import glob
 import json
 import os
@@ -180,8 +181,6 @@ def test_upsert_store_keeps_latest_per_key(spark, sf_dir, replay_dir, tmp_path):
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Rows older than watermark - delay are dropped in append mode
     (SURVEY.md §2.4 T4 — our explicit policy vs the reference's silent 24h)."""
-    import datetime as dt
-
     import time as time_mod
 
     base = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -228,6 +227,177 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     # …but the late row — behind the watermark when its file arrived — was
     # dropped: its window never reached the output in any run
     assert (base - dt.timedelta(hours=2)) not in emitted
+
+
+#: The live topology's input rows, as the landing generator writes them.
+LIVE_SCHEMA = (
+    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
+    "value DOUBLE, props STRING"
+)
+
+
+def _land(src: str, name: str, rows: list[tuple[int, dt.datetime, float]]) -> None:
+    """Land ``(event_id, ts, value)`` rows as one parquet file: written
+    beside ``src`` and renamed in, so the stream never lists a partial file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ids, ts, values = (list(c) for c in zip(*rows))
+    table = pa.table({
+        "event_id": pa.array(ids, pa.int64()),
+        "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+        "user_id": pa.array([i % 7 for i in ids], pa.int64()),
+        "event_type": ["view"] * len(ids),
+        "value": pa.array(values, pa.float64()),
+        "props": ["{}"] * len(ids),
+    })
+    tmp = os.path.join(os.path.dirname(src), f".{name}")
+    pq.write_table(table, tmp)
+    os.rename(tmp, os.path.join(src, name))
+
+
+def test_pipeline_restart_lands_each_row_exactly_once(spark, tmp_path):
+    """Stop the reference topology, land more rows in the SAME 30 s windows,
+    restart from the checkpoints: the jovens sink holds each qualifying
+    event once and each window's latest keyed-JSON count equals the batch
+    count over every landed row (Structured Streaming's exactly-once via
+    source log + sink manifest + state store log)."""
+    import collections
+
+    from kafka_exercise_spark.streaming.pipeline import JOVENS_STREAM_CUTOFF
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    jovens_out, idadecont_out = str(tmp_path / "jovens"), str(tmp_path / "idadecont")
+    os.makedirs(src)
+    base = dt.datetime(2024, 3, 1, 12, 0, 0, tzinfo=dt.timezone.utc)
+
+    def at(s):
+        return base + dt.timedelta(seconds=s)
+
+    def value(i):  # both idadecat classes in every window
+        return 150.0 if i % 2 else 20.0
+
+    before_cutoff = (5, dt.datetime(2023, 6, 1, tzinfo=dt.timezone.utc), 150.0)
+    _land(src, "f0.parquet", [(i, at(2 * i), value(i)) for i in range(5)] + [before_cutoff])
+    _land(src, "f1.parquet", [(i, at(i), value(i)) for i in range(10, 15)])
+    _land(src, "f2.parquet", [(i, at(i + 11), value(i)) for i in range(20, 25)])
+
+    def run():
+        mgr = PipelineManager(spark, ckpt)
+        events = sources.file_stream(
+            spark, src, LIVE_SCHEMA, max_files_per_trigger=None
+        )
+        queries = [
+            mgr.start_jovens(events, jovens_out),
+            mgr.start_idadecont(events, idadecont_out),
+        ]
+        for q in queries:
+            q.processAllAvailable()
+        mgr.stop_all()
+
+    run()
+    # The watermark now trails the latest ts (base+35 s) by 1 minute, so
+    # these rows are on time, and both windows they fall in got rows above.
+    _land(src, "f3.parquet", [(i, at(i - 25), value(i)) for i in range(30, 35)])
+    _land(src, "f4.parquet", [(i, at(i + 15), value(i)) for i in range(40, 45)])
+    run()
+
+    landed = spark.read.schema(LIVE_SCHEMA).parquet(src)
+    cutoff = dt.datetime.fromisoformat(JOVENS_STREAM_CUTOFF).replace(
+        tzinfo=dt.timezone.utc
+    )
+    qualifying = {
+        r["event_id"] for r in landed.collect()
+        if r["ts"].astimezone(dt.timezone.utc) >= cutoff
+    }
+    assert len(qualifying) == 25
+    assert os.path.isdir(os.path.join(jovens_out, "_spark_metadata"))
+    got = collections.Counter(
+        r["event_id"] for r in spark.read.parquet(jovens_out).collect()
+    )
+    assert got == dict.fromkeys(qualifying, 1)
+
+    latest: dict[tuple[str, int], tuple[int, int]] = {}
+    for part in glob.glob(os.path.join(idadecont_out, "batch=*", "*.json")):
+        batch = int(os.path.basename(os.path.dirname(part)).removeprefix("batch="))
+        with open(part) as fh:
+            for line in fh:
+                r = json.loads(line)
+                key = (
+                    r["idadecat"],
+                    int(dt.datetime.fromisoformat(r["window_start"]).timestamp()),
+                )
+                if batch >= latest.get(key, (-1, 0))[0]:
+                    latest[key] = (batch, r["contagem"])
+    want = {
+        (r["idadecat"], r["w"]): r["contagem"]
+        for r in idadecont_transform(idadeclass_transform(landed))
+        .select("idadecat", F.col("window_start").cast("long").alias("w"), "contagem")
+        .collect()
+    }
+    assert {k: c for k, (_, c) in latest.items()} == want
+    assert sum(want.values()) == 26
+    # the restart ran on RocksDB changelog checkpoints, not full snapshots only
+    assert glob.glob(
+        os.path.join(ckpt, "idadecont", "state", "**", "*.changelog"), recursive=True
+    )
+
+
+def test_file_stream_lists_landed_files_on_the_driver(spark, tmp_path):
+    """A micro-batch over 40 files (above Spark's default parallel-listing
+    threshold of 32 paths) lists them on the driver: no "Listing leaf files"
+    job runs in the query's group, and every row reaches the sink."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    t0 = dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)
+    for i in range(40):
+        _land(src, f"f{i:02d}.parquet", [(i, t0 + dt.timedelta(seconds=i), 1.0)])
+    stream = sources.file_stream(spark, src, LIVE_SCHEMA, max_files_per_trigger=None)
+    out = str(tmp_path / "out")
+    q = sinks.parquet_sink(
+        stream, out, str(tmp_path / "ck"), "listing_fence", trigger_once=True
+    )
+    q.awaitTermination(120)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    descriptions = []
+    for job_id in sc.statusTracker().getJobIdsForGroup(str(q.runId)):
+        d = store.job(job_id).description()
+        descriptions.append(d.get() if d.isDefined() else "")
+    assert descriptions, "the query ran no job in its run-id group"
+    assert not [d for d in descriptions if d.startswith("Listing leaf files")]
+    got = sorted(r["event_id"] for r in spark.read.parquet(out).collect())
+    assert got == list(range(40))
+
+
+def test_live_session_defaults_yield_to_extra_conf(spark, tmp_path):
+    """get_spark's driver-side listing and changelog-checkpointing defaults
+    are on in a default local session, and a caller's extra_conf wins."""
+    import subprocess
+    import sys
+
+    from kafka_exercise_spark.session import LOCAL_LISTING_CONF
+
+    (listing, default), = LOCAL_LISTING_CONF.items()
+    changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    assert spark.conf.get(listing) == default
+    assert spark.conf.get(changelog) == "true"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import json, sys; sys.path.insert(0, sys.argv[1]);"
+        "from kafka_exercise_spark.session import get_spark;"
+        "s = get_spark('override', extra_conf=json.loads(sys.argv[2]));"
+        "print('CONF:' + json.dumps({k: s.conf.get(k) for k in json.loads(sys.argv[2])}))"
+    )
+    want = {listing: "32", changelog: "false"}
+    env = dict(os.environ, SPARK_GRAFT_WAREHOUSE=str(tmp_path / "wh"))
+    proc = subprocess.run(
+        [sys.executable, "-c", script, root, json.dumps(want)],
+        capture_output=True, text=True, timeout=300, env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    line = next(ln for ln in proc.stdout.splitlines() if ln.startswith("CONF:"))
+    assert json.loads(line[len("CONF:"):]) == want
 
 
 def test_incremental_source_captures_appends_only(spark, sf_dir, tmp_path):

@@ -16,6 +16,11 @@ SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-l
 stage "perfbench self-tests"
 python3 -m pytest perfbench -q || fail=1
 
+stage "live pipeline (perfbench live_reference: every row exactly once in both sinks)"
+python3 perfbench/run.py --workload live_reference --seed 1 --seconds 20 --trace 0 \
+    | tail -1 | python3 -c "import json, sys; r = json.loads(sys.stdin.read()); print(r); sys.exit(r['failed'] != 0)" \
+    || fail=1
+
 stage "oracle sweep sf0.01 (the driver gate, emulated)"
 python tools/verify_local.py /root/testdata/sf0.01 | tail -3 || fail=1
 
