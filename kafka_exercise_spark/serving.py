@@ -194,40 +194,37 @@ def serving_lake_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Streaming final state ≡ batch filter, so the DuckDB oracle is the plain
     filtered GROUP BY over ``events``.
     """
-    import tempfile
-
+    from kafka_exercise_spark.catalog import rm_parent_dir
     from kafka_exercise_spark.streaming.pipeline import PipelineManager
-    from kafka_exercise_spark.streaming.sources import (
-        file_stream,
-        land_events_replay,
-    )
-    from kafka_exercise_spark.streaming.stateful import await_bounded
-    from kafka_exercise_spark.streaming.tuning import bounded_replay_conf
+    from kafka_exercise_spark.streaming.sources import land_events_replay
+    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
-    def _build():
-        src_dir, schema = land_events_replay(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="serving_lake_")
-        lake = os.path.join(work, "lake")
-
-        stream = file_stream(spark, src_dir, schema, max_files_per_trigger=None)
-        manager = PipelineManager(spark, checkpoint_root=os.path.join(work, "ckpt"))
-        with bounded_replay_conf(spark):
-            q = manager.start_jovens(
-                stream,
-                os.path.join(lake, "jovens"),
-                flush_size=100_000,
-                trigger_once=True,
-            )
-            await_bounded(q, name="serving_jovens_drain")
-
-        layer = ServingLayer(spark)
-        layer.register_lake(lake)
-        layer.materialize(
-            "jovens_daily", JOVENS_DAILY_ROLLUP, os.path.join(work, "rollup")
+    def drain(stream: DataFrame, out: str, checkpoint: str):
+        return PipelineManager(spark, checkpoint_root=checkpoint).start_jovens(
+            stream,
+            os.path.join(out, "lake", "jovens"),
+            flush_size=100_000,
+            trigger_once=True,
         )
-        return layer
 
-    layer = memo(spark, "serving_lake", sf_dir, _build)
+    def serve(out: str) -> tuple[ServingLayer, str]:
+        layer = ServingLayer(spark)
+        layer.register_lake(os.path.join(out, "lake"))
+        layer.materialize(
+            "jovens_daily", JOVENS_DAILY_ROLLUP, os.path.join(out, "rollup")
+        )
+        return layer, out
+
+    # the lake and the rollup are served from the replay's output dir,
+    # which the memo removes when it drops the layer
+    layer, _out = memo(
+        spark, "serving_lake", sf_dir,
+        lambda: run_bounded_replay(
+            spark, land_events_replay(spark, sf_dir), sink=drain,
+            name="serving_jovens_drain", keep_out=True, result=serve,
+        ),
+        cleanup=lambda served: rm_parent_dir(served[1]),
+    )
     # the dashboard query: served from the rollup parquet, not the fact lake
     return layer.sql(
         "SELECT dt_event, event_type, n_events, n_users FROM jovens_daily"

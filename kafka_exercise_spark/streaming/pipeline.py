@@ -15,6 +15,8 @@ unbounded implicit state is exactly what breaks at 100 TB.
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +30,11 @@ from kafka_exercise_spark.operators.pipeline_ops import (
     idadecont_transform,
 )
 from kafka_exercise_spark.streaming import sinks
+from kafka_exercise_spark.streaming.sources import (
+    land_documents_replay,
+    land_events_replay,
+)
+from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
 DEFAULT_WATERMARK = "1 minute"
 
@@ -118,45 +125,24 @@ def streaming_idadecont_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     final state ≡ batch aggregation (the Structured Streaming model), the
     DuckDB oracle is the plain windowed GROUP BY.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_exercise_spark.streaming.sources import (
-        file_stream,
-        land_events_replay,
-    )
-
-    # shared memoized landing (one write per session+sf); ckpt stays fresh
-    src_dir, schema = land_events_replay(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="idadecont_replay_ckpt_")
-
-    name = "idadecont_replay_contract"
-    stream = file_stream(spark, src_dir, schema, max_files_per_trigger=None)
-    counted = idadecont_transform(
-        idadeclass_transform(stream), watermark_delay=DEFAULT_WATERMARK
-    )
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
-
-    run_bounded_replay(
-        spark,
-        counted,
-        checkpoint=os.path.join(work, "ckpt"),
-        name=name,
-        output_mode="complete",
-    )
     from kafka_exercise_spark.functions import timestamptostring
 
+    name = "idadecont_replay_contract"
+    run_bounded_replay(
+        spark, land_events_replay(spark, sf_dir),
+        lambda stream: idadecont_transform(
+            idadeclass_transform(stream), watermark_delay=DEFAULT_WATERMARK
+        ),
+        name=name, output_mode="complete",
+    )
     # window bounds as strings — same hash-stable shape as the batch
     # idadecont entry (FIXTURES.md §4)
-    result = spark.table(name).select(
+    return spark.table(name).select(
         timestamptostring("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         timestamptostring("window_end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
         "idadecat",
         "contagem",
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,45 +162,30 @@ def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole fixture, so the oracle is a plain GROUP BY over the same
     CASE logic.
     """
-    import os
-    import tempfile
-
     from kafka_exercise_spark.operators.dataquality import (
         event_row_violations,
     )
-    from kafka_exercise_spark.streaming.sources import (
-        file_stream,
-        land_events_replay,
-    )
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
-    def _build():
-        src_dir, schema = land_events_replay(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="dq_gate_")
-        out = os.path.join(work, "gated")
-
-        def gate(batch_df: DataFrame, batch_id: int) -> None:
-            tagged = batch_df.withColumn("violations", event_row_violations())
-            routed = tagged.withColumn(
-                "routed",
-                F.when(F.col("violations") == "", "publish").otherwise(
-                    "quarantine"
-                ),
-            )
-            routed.write.mode("overwrite").partitionBy("routed").parquet(
-                os.path.join(out, f"batch={batch_id}")
-            )
-
-        stream = file_stream(spark, src_dir, schema, max_files_per_trigger=None)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            foreach_batch=gate,
+    def gate(batch_df: DataFrame, batch_id: int, out: str) -> None:
+        tagged = batch_df.withColumn("violations", event_row_violations())
+        routed = tagged.withColumn(
+            "routed",
+            F.when(F.col("violations") == "", "publish").otherwise(
+                "quarantine"
+            ),
         )
-        return out
+        routed.write.mode("overwrite").partitionBy("routed").parquet(
+            os.path.join(out, f"batch={batch_id}")
+        )
 
-    out = memo(spark, "dq_gate", sf_dir, _build, cleanup=rm_parent_dir)
+    out = memo(
+        spark, "dq_gate", sf_dir,
+        lambda: run_bounded_replay(
+            spark, land_events_replay(spark, sf_dir), foreach_batch=gate,
+            keep_out=True,
+        ),
+        cleanup=rm_parent_dir,
+    )
 
     landed = spark.read.option("recursiveFileLookup", "true").parquet(out)
     return landed.groupBy("violations").agg(
@@ -229,24 +200,24 @@ def incremental_source_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     cursor beyond the mark, the connector's ``WHERE dt_update > :hwm``
     capture (reference connect_postgres.config:9-10)."""
     import json
-    import os
     import tempfile
 
     from kafka_exercise_spark.sources.incremental import TimestampModeSource
-
-    state = os.path.join(tempfile.mkdtemp(prefix="hwm_"), "state.json")
-    with open(state, "w") as f:
-        json.dump({"hwm": "2024-01-16 00:00:00", "cursor_col": "ts"}, f)
 
     def reader(s: SparkSession) -> DataFrame:
         from kafka_exercise_spark.catalog import load_table
 
         return load_table(s, sf_dir, "events")
 
-    src = TimestampModeSource(spark, reader, cursor_col="ts", state_path=state)
-    return src.poll_once().select(
-        "event_id", "user_id", "event_type", "value", "props"
-    )
+    # poll_once reads the mark eagerly, so its dir can go before returning
+    with tempfile.TemporaryDirectory(prefix="hwm_") as d:
+        state = os.path.join(d, "state.json")
+        with open(state, "w") as f:
+            json.dump({"hwm": "2024-01-16 00:00:00", "cursor_col": "ts"}, f)
+        src = TimestampModeSource(spark, reader, cursor_col="ts", state_path=state)
+        return src.poll_once().select(
+            "event_id", "user_id", "event_type", "value", "props"
+        )
 
 
 def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,43 +235,25 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole fixture rolled up per source, so the oracle is a plain GROUP BY
     over the same signal expressions.
     """
-    import os
-    import tempfile
-
-    from kafka_exercise_spark.catalog import load_table
     from kafka_exercise_spark.operators.textops import curation_decisions
-    from kafka_exercise_spark.streaming.sources import file_stream
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
-    def _build():
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
+    def gate(batch_df: DataFrame, batch_id: int, out: str) -> None:
+        decided = curation_decisions(batch_df).withColumn(
+            "routed",
+            F.when(F.col("keep"), "publish").otherwise("reject"),
         )
-        work = tempfile.mkdtemp(prefix="curation_gate_")
-        src = os.path.join(work, "src")
-        out = os.path.join(work, "gated")
-        docs.repartition(4).write.mode("overwrite").parquet(src)
-        schema = docs.schema
+        decided.drop("text").write.mode("overwrite").partitionBy(
+            "routed"
+        ).parquet(os.path.join(out, f"batch={batch_id}"))
 
-        def gate(batch_df: DataFrame, batch_id: int) -> None:
-            decided = curation_decisions(batch_df).withColumn(
-                "routed",
-                F.when(F.col("keep"), "publish").otherwise("reject"),
-            )
-            decided.drop("text").write.mode("overwrite").partitionBy(
-                "routed"
-            ).parquet(os.path.join(out, f"batch={batch_id}"))
-
-        stream = file_stream(spark, src, schema, max_files_per_trigger=2)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            foreach_batch=gate,
-        )
-        return out
-
-    out = memo(spark, "curation_gate", sf_dir, _build, cleanup=rm_parent_dir)
+    out = memo(
+        spark, "curation_gate", sf_dir,
+        lambda: run_bounded_replay(
+            spark, land_documents_replay(spark, sf_dir, ("doc_id", "source", "text")),
+            max_files_per_trigger=2, foreach_batch=gate, keep_out=True,
+        ),
+        cleanup=rm_parent_dir,
+    )
 
     # plain partition discovery (NOT recursiveFileLookup, which disables
     # it): batch=<id>/routed=<decision> both come back as columns
@@ -325,8 +278,6 @@ def _version_before(store: str, batch_id: int) -> str:
     true predecessor, never into its own output (the idempotency the
     merge/SCD2/compaction replays promise), and a restart resumes from
     disk state rather than driver memory."""
-    import os  # noqa: PLC0415
-
     prior = [
         int(d[1:])
         for d in os.listdir(store)
@@ -335,14 +286,83 @@ def _version_before(store: str, batch_id: int) -> str:
     return f"v{max(prior):04d}" if prior else "v_init"
 
 
+def fold_versioned_store(
+    spark: SparkSession,
+    landing,
+    *,
+    keys: list[str],
+    init: DataFrame,
+    batch_side: Callable[[DataFrame], DataFrame],
+    last_obs: tuple[str, ...],
+    extra: dict | None = None,
+) -> DataFrame:
+    """Fold a bounded replay (2 files per trigger) into a versioned store
+    and return its final version (``localCheckpoint``-ed) — the live CDC
+    apply shared by the merge, SCD2 and compaction replays.
+
+    The store lives in the replay's output dir: micro-batch k writes
+    ``v{k:04d}`` from the version STRICTLY before it, so re-delivering
+    batch k rewrites version k from version k−1 and never double-counts.
+    The version before the first batch, ``v_init``, is ``init`` itself: it
+    is a deterministic frame over the landing, so it is read from its plan
+    rather than written to the store and read back. Each batch's ``batch_side(batch_df)`` (store
+    column names, one row per key) is full-outer joined to that version on
+    ``keys``:
+
+    - ``n`` is the sum of both sides' counts;
+    - ``us``, ``eid`` and the ``last_obs`` fields come from the batch side
+      iff its (us, eid) tuple is strictly greater — out-of-order-safe, so
+      the fold is commutative-associative and converges to the batch
+      result whatever the arrival order;
+    - each ``extra`` column is the given expression over the joined row,
+      where the batch side's columns read as ``b_<name>``.
+
+    Stored columns: keys, n, *last_obs, us, eid, *extra.
+    """
+
+    def version_before(store: str, batch_id: int) -> DataFrame:
+        version = _version_before(store, batch_id)
+        if version == "v_init":
+            return init
+        return spark.read.parquet(os.path.join(store, version))
+
+    def apply_batch(batch_df: DataFrame, batch_id: int, store: str) -> None:
+        b = batch_side(batch_df)
+        b = b.select(
+            *keys, *[F.col(c).alias(f"b_{c}") for c in b.columns if c not in keys]
+        )
+        b_newer = F.col("b_n").isNotNull() & (
+            F.col("n").isNull()
+            | (F.col("b_us") > F.col("us"))
+            | ((F.col("b_us") == F.col("us")) & (F.col("b_eid") > F.col("eid")))
+        )
+        version_before(store, batch_id).join(b, keys, "full_outer").select(
+            *keys,
+            (F.coalesce("n", F.lit(0)) + F.coalesce("b_n", F.lit(0)))
+            .cast("long")
+            .alias("n"),
+            *[
+                F.when(b_newer, F.col(f"b_{c}")).otherwise(F.col(c)).alias(c)
+                for c in (*last_obs, "us", "eid")
+            ],
+            *[col.alias(c) for c, col in (extra or {}).items()],
+        ).write.mode("overwrite").parquet(os.path.join(store, f"v{batch_id:04d}"))
+
+    return run_bounded_replay(
+        spark, landing, max_files_per_trigger=2, foreach_batch=apply_batch,
+        result=lambda store: version_before(store, 1 << 30).localCheckpoint(),
+    )
+
+
 def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch MERGE (operators/merge.py) as a LIVE CDC apply under real
     StreamExecution: the pre-split profile table is the initial store,
     post-split events arrive in micro-batches (2 files per trigger → 4
     real triggers), and every batch folds into a NEW store version via
-    one full-outer merge — versioned stores make replay idempotent (a
-    re-run of batch k rewrites version k from version k−1, never
-    double-counts). Final state ≡ the batch merge, which is the oracle.
+    one full-outer merge (``fold_versioned_store``) — versioned stores
+    make replay idempotent (a re-run of batch k rewrites version k from
+    version k−1, never double-counts). Final state ≡ the batch merge,
+    which is the oracle.
 
     The fold is commutative-associative by construction: counts ADD, and
     the last-observation fields compare on the exact (micros, event_id)
@@ -352,19 +372,10 @@ def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride along in the store so the final action audit (insert / update /
     keep) needs no second pass over history.
     """
-    import os
-    import shutil
-    import tempfile
-
     from kafka_exercise_spark.operators.merge import (
         MERGE_SPLIT_US,
         _profiles,
     )
-    from kafka_exercise_spark.streaming.sources import (
-        file_stream,
-        land_events_replay,
-    )
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
     def profiles(df: DataFrame) -> DataFrame:
         # THE batch profile aggregate (merge._profiles — single source of
@@ -378,85 +389,36 @@ def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _build():
-        src_dir, schema = land_events_replay(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="merge_replay_")
-        store = os.path.join(work, "store")
-        os.makedirs(store)
-
+        landing = land_events_replay(spark, sf_dir)
         # initial store: the pre-split target, flags (init=T, touched=F)
         target = profiles(
-            spark.read.schema(schema)
-            .parquet(src_dir)
+            spark.read.schema(landing[1])
+            .parquet(landing[0])
             .where(F.unix_micros(F.col("ts")) < MERGE_SPLIT_US)
         ).select(
             "*", F.lit(True).alias("init"), F.lit(False).alias("touched")
         )
-        target.write.parquet(os.path.join(store, "v_init"))
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            b = profiles(
-                batch_df.where(F.unix_micros(F.col("ts")) >= MERGE_SPLIT_US)
-            ).select(
-                F.col("user_id"),
-                F.col("n").alias("b_n"),
-                F.col("v").alias("b_v"),
-                F.col("us").alias("b_us"),
-                F.col("eid").alias("b_eid"),
-            )
-            prev = spark.read.parquet(
-                os.path.join(store, _version_before(store, batch_id))
-            )
-            in_b = F.col("b_n").isNotNull()
-            in_t = F.col("n").isNotNull()
-            # the batch side wins the last-observation fields iff its
-            # (us, eid) tuple is strictly greater — out-of-order-safe
-            b_newer = in_b & (
-                ~in_t
-                | (F.col("b_us") > F.col("us"))
-                | ((F.col("b_us") == F.col("us")) & (F.col("b_eid") > F.col("eid")))
-            )
-            merged = (
-                prev.join(b, "user_id", "full_outer")
-                .select(
-                    "user_id",
-                    (F.coalesce("n", F.lit(0)) + F.coalesce("b_n", F.lit(0)))
-                    .cast("long")
-                    .alias("n"),
-                    F.when(b_newer, F.col("b_v")).otherwise(F.col("v")).alias("v"),
-                    F.when(b_newer, F.col("b_us")).otherwise(F.col("us")).alias("us"),
-                    F.when(b_newer, F.col("b_eid")).otherwise(F.col("eid")).alias("eid"),
-                    F.coalesce("init", F.lit(False)).alias("init"),
-                    (F.coalesce("touched", F.lit(False)) | in_b).alias("touched"),
-                )
-            )
-            vname = f"v{batch_id:04d}"
-            merged.write.mode("overwrite").parquet(os.path.join(store, vname))
-
-        stream = file_stream(spark, src_dir, schema, max_files_per_trigger=2)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            foreach_batch=apply_batch,
+        final = fold_versioned_store(
+            spark, landing, keys=["user_id"], init=target,
+            batch_side=lambda b: profiles(
+                b.where(F.unix_micros(F.col("ts")) >= MERGE_SPLIT_US)
+            ),
+            last_obs=("v",),
+            extra={
+                "init": F.coalesce("init", F.lit(False)),
+                "touched": F.coalesce("touched", F.lit(False)) | F.col("b_n").isNotNull(),
+            },
         )
-        final = (
-            spark.read.parquet(
-                os.path.join(store, _version_before(store, 1 << 30))
-            )
-            .select(
-                "user_id",
-                F.col("n").alias("n_events"),
-                F.col("v").alias("last_value"),
-                F.col("us").alias("last_seen_us"),
-                F.when(F.col("init") & F.col("touched"), F.lit("update"))
-                .when(~F.col("init"), F.lit("insert"))
-                .otherwise(F.lit("keep"))
-                .alias("action"),
-            )
-            .localCheckpoint()
+        return final.select(
+            "user_id",
+            F.col("n").alias("n_events"),
+            F.col("v").alias("last_value"),
+            F.col("us").alias("last_seen_us"),
+            F.when(F.col("init") & F.col("touched"), F.lit("update"))
+            .when(~F.col("init"), F.lit("insert"))
+            .otherwise(F.lit("keep"))
+            .alias("action"),
         )
-        shutil.rmtree(work, ignore_errors=True)
-        return final
 
     return memo(spark, "merge_replay", sf_dir, _build)
 
@@ -465,102 +427,53 @@ def streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCD2 apply (operators/merge.py merge_scd2_apply) fed by a LIVE
     CDC staging fold: post-split events arrive in micro-batches under
     real StreamExecution, each batch folds into a versioned STAGING
-    profile store (count adds, last-observation (us, eid) max-wins,
-    first-seen min-wins — commutative-associative, so out-of-order
-    batches converge), and the close-old/open-new history apply runs
-    once over the final staging — the nightly-apply pattern a warehouse
-    actually runs against a streaming-landed CDC staging table.
+    profile store (``fold_versioned_store``: count adds, last-observation
+    (us, eid) max-wins, first-seen min-wins — commutative-associative, so
+    out-of-order batches converge), and the close-old/open-new history
+    apply runs once over the final staging — the nightly-apply pattern a
+    warehouse actually runs against a streaming-landed CDC staging table.
 
     Final history ≡ the one-shot batch SCD2 (same `scd2_rows` projection,
     same oracle by design); versioned stores make a re-delivered batch
     idempotent, exactly like ``streaming_merge_replay``.
     """
-    import os
-    import shutil
-    import tempfile
-
     from kafka_exercise_spark.operators.merge import (
         MERGE_SPLIT_US,
         _profiles,
         scd2_rows,
     )
-    from kafka_exercise_spark.streaming.sources import (
-        file_stream,
-        land_events_replay,
-    )
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
     def _build():
-        src_dir, schema = land_events_replay(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="scd2_replay_")
-        store = os.path.join(work, "staging")
-        os.makedirs(store)
-        # empty initial staging — the batch side accumulates from nothing
-        empty = spark.createDataFrame(
-            [],
-            "user_id long, n long, v double, us long, eid long, fus long",
-        )
-        empty.write.parquet(os.path.join(store, "v_init"))
-
-        def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-            b = _profiles(
-                batch_df.where(F.unix_micros(F.col("ts")) >= MERGE_SPLIT_US)
+        landing = land_events_replay(spark, sf_dir)
+        staging = fold_versioned_store(
+            spark, landing, keys=["user_id"],
+            # empty initial staging — the batch side accumulates from nothing
+            init=spark.createDataFrame(
+                [], "user_id long, n long, v double, us long, eid long, fus long"
+            ),
+            batch_side=lambda b: _profiles(
+                b.where(F.unix_micros(F.col("ts")) >= MERGE_SPLIT_US)
             ).select(
                 "user_id",
-                F.col("n_events").alias("b_n"),
-                F.col("last_value").alias("b_v"),
-                F.col("last_seen_us").alias("b_us"),
-                F.col("last_eid").alias("b_eid"),
-                F.col("first_us").alias("b_fus"),
-            )
-            prev = spark.read.parquet(
-                os.path.join(store, _version_before(store, batch_id))
-            )
-            in_b = F.col("b_n").isNotNull()
-            in_p = F.col("n").isNotNull()
-            b_newer = in_b & (
-                ~in_p
-                | (F.col("b_us") > F.col("us"))
-                | (
-                    (F.col("b_us") == F.col("us"))
-                    & (F.col("b_eid") > F.col("eid"))
-                )
-            )
-            folded = prev.join(b, "user_id", "full_outer").select(
-                "user_id",
-                (F.coalesce("n", F.lit(0)) + F.coalesce("b_n", F.lit(0)))
-                .cast("long")
-                .alias("n"),
-                F.when(b_newer, F.col("b_v")).otherwise(F.col("v")).alias("v"),
-                F.when(b_newer, F.col("b_us"))
-                .otherwise(F.col("us"))
-                .alias("us"),
-                F.when(b_newer, F.col("b_eid"))
-                .otherwise(F.col("eid"))
-                .alias("eid"),
-                F.least(
+                F.col("n_events").alias("n"),
+                F.col("last_value").alias("v"),
+                F.col("last_seen_us").alias("us"),
+                F.col("last_eid").alias("eid"),
+                F.col("first_us").alias("fus"),
+            ),
+            last_obs=("v",),
+            extra={
+                "fus": F.least(
                     F.coalesce("fus", F.col("b_fus")),
                     F.coalesce("b_fus", F.col("fus")),
-                )
-                .cast("long")
-                .alias("fus"),
-            )
-            folded.write.mode("overwrite").parquet(
-                os.path.join(store, f"v{batch_id:04d}")
-            )
-
-        stream = file_stream(spark, src_dir, schema, max_files_per_trigger=2)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            foreach_batch=fold_batch,
+                ).cast("long"),
+            },
         )
         # nightly apply: deterministic pre-split target ⟗ final staging,
         # through the ONE shared SCD2 projection
         target = _profiles(
-            spark.read.schema(schema)
-            .parquet(src_dir)
+            spark.read.schema(landing[1])
+            .parquet(landing[0])
             .where(F.unix_micros(F.col("ts")) < MERGE_SPLIT_US)
         ).select(
             "user_id",
@@ -569,20 +482,16 @@ def streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("last_seen_us").alias("t_us"),
             F.col("first_us").alias("t_first"),
         )
-        staging = spark.read.parquet(
-            os.path.join(store, _version_before(store, 1 << 30))
-        ).select(
+        staging = staging.select(
             "user_id",
             F.col("n").alias("s_n"),
             F.col("v").alias("s_v"),
             F.col("us").alias("s_us"),
             F.col("fus").alias("s_first"),
         )
-        final = scd2_rows(
+        return scd2_rows(
             target.join(staging, "user_id", "full_outer")
         ).localCheckpoint()
-        shutil.rmtree(work, ignore_errors=True)
-        return final
 
     return memo(spark, "scd2_replay", sf_dir, _build)
 
@@ -592,9 +501,10 @@ def streaming_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     events changelog arrives in micro-batches under real StreamExecution,
     each batch first compacts ITSELF (per-key latest + record count — the
     map-side combine of compaction), then folds into a versioned store
-    that keeps the max-(us, event_id) record per key and adds counts.
-    The final store with tombstones filtered hash-equals the batch
-    ``operators/merge.log_compaction`` — the SAME oracle, by design.
+    (``fold_versioned_store``) that keeps the max-(us, event_id) record
+    per key and adds counts. The final store with tombstones filtered
+    hash-equals the batch ``operators/merge.log_compaction`` — the SAME
+    oracle, by design.
 
     The fold is commutative-associative (counts add; the surviving record
     is the max under a total order), so out-of-order micro-batches
@@ -602,16 +512,7 @@ def streaming_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact segments in any order. Versioned stores make redelivery
     idempotent, same contract as the merge/SCD2 replays.
     """
-    import os
-    import shutil
-    import tempfile
-
     from kafka_exercise_spark.operators.merge import TOMBSTONE_BELOW
-    from kafka_exercise_spark.streaming.sources import (
-        file_stream,
-        land_events_replay,
-    )
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
     def compact(df: DataFrame) -> DataFrame:
         us = F.unix_micros(F.col("ts"))
@@ -638,68 +539,26 @@ def streaming_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _build():
-        src_dir, schema = land_events_replay(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="compaction_replay_")
-        store = os.path.join(work, "store")
-        os.makedirs(store)
-        spark.createDataFrame(
-            [],
-            "user_id long, event_type string, eid long, v double,"
-            " p string, us long, n long",
-        ).write.parquet(os.path.join(store, "v_init"))
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            b = compact(batch_df).withColumnsRenamed(
-                {"eid": "b_eid", "v": "b_v", "p": "b_p", "us": "b_us", "n": "b_n"}
-            )
-            prev = spark.read.parquet(
-                os.path.join(store, _version_before(store, batch_id))
-            )
-            in_b = F.col("b_n").isNotNull()
-            in_t = F.col("n").isNotNull()
-            b_newer = in_b & (
-                ~in_t
-                | (F.col("b_us") > F.col("us"))
-                | ((F.col("b_us") == F.col("us")) & (F.col("b_eid") > F.col("eid")))
-            )
-            merged = prev.join(b, ["user_id", "event_type"], "full_outer").select(
-                "user_id",
-                "event_type",
-                F.when(b_newer, F.col("b_eid")).otherwise(F.col("eid")).alias("eid"),
-                F.when(b_newer, F.col("b_v")).otherwise(F.col("v")).alias("v"),
-                F.when(b_newer, F.col("b_p")).otherwise(F.col("p")).alias("p"),
-                F.when(b_newer, F.col("b_us")).otherwise(F.col("us")).alias("us"),
-                (F.coalesce("n", F.lit(0)) + F.coalesce("b_n", F.lit(0)))
-                .cast("long")
-                .alias("n"),
-            )
-            merged.write.mode("overwrite").parquet(
-                os.path.join(store, f"v{batch_id:04d}")
-            )
-
-        stream = file_stream(spark, src_dir, schema, max_files_per_trigger=2)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            foreach_batch=apply_batch,
+        final = fold_versioned_store(
+            spark, land_events_replay(spark, sf_dir),
+            keys=["user_id", "event_type"],
+            init=spark.createDataFrame(
+                [],
+                "user_id long, event_type string, eid long, v double,"
+                " p string, us long, n long",
+            ),
+            batch_side=compact,
+            last_obs=("v", "p"),
         )
-        final = (
-            spark.read.parquet(os.path.join(store, _version_before(store, 1 << 30)))
-            .filter(F.col("v") >= TOMBSTONE_BELOW)
-            .select(
-                "user_id",
-                "event_type",
-                F.col("eid").alias("last_event_id"),
-                F.col("v").alias("value"),
-                F.col("p").alias("props"),
-                F.col("us").alias("last_us"),
-                (F.col("n") - 1).cast("long").alias("n_superseded"),
-            )
-            .localCheckpoint()
+        return final.filter(F.col("v") >= TOMBSTONE_BELOW).select(
+            "user_id",
+            "event_type",
+            F.col("eid").alias("last_event_id"),
+            F.col("v").alias("value"),
+            F.col("p").alias("props"),
+            F.col("us").alias("last_us"),
+            (F.col("n") - 1).cast("long").alias("n_superseded"),
         )
-        shutil.rmtree(work, ignore_errors=True)
-        return final
 
     return memo(spark, "compaction_replay", sf_dir, _build)
 
@@ -723,32 +582,17 @@ def streaming_model_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     no state store, no corpus access. Results append to a parquet sink
     dir (exactly-once via the foreachBatch append + file-source log).
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from kafka_exercise_spark.catalog import load_table  # noqa: PLC0415
     from kafka_exercise_spark.operators.dedup import _split_of  # noqa: PLC0415
     from kafka_exercise_spark.operators.textops import (  # noqa: PLC0415
         perceptron_featurize,
         perceptron_model_weights,
         perceptron_score,
     )
-    from kafka_exercise_spark.streaming.sources import file_stream  # noqa: PLC0415
-    from kafka_exercise_spark.streaming.stateful import (  # noqa: PLC0415
-        run_bounded_replay,
-    )
 
     def _build():
         w = perceptron_model_weights(spark, sf_dir)
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        work = tempfile.mkdtemp(prefix="model_gate_")
-        src = os.path.join(work, "src")
-        out = os.path.join(work, "out")
-        docs.repartition(4).write.mode("overwrite").parquet(src)
-        schema = docs.schema
 
-        def score(batch_df: DataFrame, batch_id: int) -> None:
+        def score(batch_df: DataFrame, batch_id: int, out: str) -> None:
             scored = perceptron_score(perceptron_featurize(batch_df), w)
             scored.select(
                 "doc_id",
@@ -757,17 +601,11 @@ def streaming_model_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "keep",
             ).write.mode("append").parquet(out)
 
-        stream = file_stream(spark, src, schema, max_files_per_trigger=2)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            name="model_gate_contract",
-            foreach_batch=score,
+        return run_bounded_replay(
+            spark, land_documents_replay(spark, sf_dir, ("doc_id", "text")),
+            max_files_per_trigger=2, name="model_gate_contract", foreach_batch=score,
+            result=lambda out: spark.read.parquet(out).localCheckpoint(),
         )
-        final = spark.read.parquet(out).localCheckpoint()
-        shutil.rmtree(work, ignore_errors=True)
-        return final
 
     return memo(spark, "model_gate", sf_dir, _build)
 
@@ -794,14 +632,6 @@ def streaming_model_update_replay(
     landed partials. This is the parameter-server gradient-push shape:
     workers push bounded deltas, the fold applies them once per round.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from kafka_exercise_spark.catalog import load_table  # noqa: PLC0415
-    from kafka_exercise_spark.operators.dedup import (  # noqa: PLC0415
-        INCREMENTAL_NEW_SOURCE,
-    )
     from kafka_exercise_spark.operators.textops import (  # noqa: PLC0415
         PERC_DIM,
         gopher_decisions,
@@ -809,25 +639,11 @@ def streaming_model_update_replay(
         perceptron_model_weights,
         perceptron_score,
     )
-    from kafka_exercise_spark.streaming.sources import file_stream  # noqa: PLC0415
-    from kafka_exercise_spark.streaming.stateful import (  # noqa: PLC0415
-        run_bounded_replay,
-    )
 
     def _build():
         w = perceptron_model_weights(spark, sf_dir)
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .filter(F.col("source") == INCREMENTAL_NEW_SOURCE)
-            .select("doc_id", "text")
-        )
-        work = tempfile.mkdtemp(prefix="model_update_")
-        src = os.path.join(work, "src")
-        out = os.path.join(work, "out")
-        docs.repartition(4).write.mode("overwrite").parquet(src)
-        schema = docs.schema
 
-        def push_deltas(batch_df: DataFrame, batch_id: int) -> None:
+        def push_deltas(batch_df: DataFrame, batch_id: int, out: str) -> None:
             feats = perceptron_featurize(batch_df)
             labels = gopher_decisions(batch_df).select(
                 "doc_id",
@@ -850,38 +666,36 @@ def streaming_model_update_replay(
                 .parquet(out)
             )
 
-        stream = file_stream(spark, src, schema, max_files_per_trigger=2)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            name="model_update_contract",
-            foreach_batch=push_deltas,
-        )
-        folded = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(F.sum("dw").cast("long").alias("dw"))
-        )
-        w_lit = F.lit(w).cast("array<bigint>")
-        grid = spark.range(PERC_DIM).select(
-            F.col("id").cast("int").alias("bucket")
-        )
-        w_before = F.element_at(w_lit, F.col("bucket") + 1)
-        final = (
-            grid.join(folded, "bucket", "left")
-            .select(
-                F.col("bucket").cast("long").alias("bucket"),
-                w_before.cast("long").alias("w_before"),
-                F.coalesce(F.col("dw"), F.lit(0)).cast("long").alias("dw"),
-                (w_before + F.coalesce(F.col("dw"), F.lit(0)))
-                .cast("long")
-                .alias("w_after"),
+        def fold(out: str) -> DataFrame:
+            folded = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(F.sum("dw").cast("long").alias("dw"))
             )
-            .localCheckpoint()
+            w_lit = F.lit(w).cast("array<bigint>")
+            grid = spark.range(PERC_DIM).select(
+                F.col("id").cast("int").alias("bucket")
+            )
+            w_before = F.element_at(w_lit, F.col("bucket") + 1)
+            return (
+                grid.join(folded, "bucket", "left")
+                .select(
+                    F.col("bucket").cast("long").alias("bucket"),
+                    w_before.cast("long").alias("w_before"),
+                    F.coalesce(F.col("dw"), F.lit(0)).cast("long").alias("dw"),
+                    (w_before + F.coalesce(F.col("dw"), F.lit(0)))
+                    .cast("long")
+                    .alias("w_after"),
+                )
+                .localCheckpoint()
+            )
+
+        return run_bounded_replay(
+            spark,
+            land_documents_replay(spark, sf_dir, ("doc_id", "text"), new_only=True),
+            max_files_per_trigger=2, name="model_update_contract",
+            foreach_batch=push_deltas, result=fold,
         )
-        shutil.rmtree(work, ignore_errors=True)
-        return final
 
     return memo(spark, "model_update", sf_dir, _build)
 
@@ -918,10 +732,6 @@ def streaming_soft_draw_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the O(near-dup) served frame — AQE broadcasts while it fits — and
     map-side expressions).
     """
-    import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from kafka_exercise_spark.catalog import load_table  # noqa: PLC0415
     from kafka_exercise_spark.functions.text import (  # noqa: PLC0415
         md5_hash64,
         tokens,
@@ -930,35 +740,18 @@ def streaming_soft_draw_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         SOFT_WEIGHT_PPM_EXPR,
         dedup_components,
     )
-    from kafka_exercise_spark.streaming.sources import (  # noqa: PLC0415
-        file_stream,
-    )
-    from kafka_exercise_spark.streaming.stateful import (  # noqa: PLC0415
-        run_bounded_replay,
+
+    draw = F.pmod(
+        md5_hash64(
+            F.concat(F.lit("softdraw:"), F.col("doc_id").cast("string"))
+        ),
+        F.lit(1_000_000),
     )
 
     def _build():
-        comps = dedup_components(spark, sf_dir).select(
-            "doc_id", "comp_size"
-        )
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
-        work = tempfile.mkdtemp(prefix="soft_draw_")
-        src = os.path.join(work, "src")
-        out = os.path.join(work, "drawn")
-        docs.repartition(4).write.mode("overwrite").parquet(src)
-        schema = docs.schema
-        draw = F.pmod(
-            md5_hash64(
-                F.concat(
-                    F.lit("softdraw:"), F.col("doc_id").cast("string")
-                )
-            ),
-            F.lit(1_000_000),
-        )
+        comps = dedup_components(spark, sf_dir).select("doc_id", "comp_size")
 
-        def admit(batch_df: DataFrame, batch_id: int) -> None:
+        def admit(batch_df: DataFrame, batch_id: int, out: str) -> None:
             decided = (
                 batch_df.join(comps, "doc_id", "left")
                 .withColumn(
@@ -981,14 +774,10 @@ def streaming_soft_draw_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(out, f"batch={batch_id}")
             )
 
-        stream = file_stream(spark, src, schema, max_files_per_trigger=2)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            foreach_batch=admit,
+        return run_bounded_replay(
+            spark, land_documents_replay(spark, sf_dir, ("doc_id", "source", "text")),
+            max_files_per_trigger=2, foreach_batch=admit, keep_out=True,
         )
-        return out
 
     out = memo(spark, "soft_draw", sf_dir, _build, cleanup=rm_parent_dir)
 

@@ -8,11 +8,13 @@
   objects *including the record key columns*. Spark's file sink is
   append-only, so this is ``foreachBatch`` writing each micro-batch's
   updates — the documented pattern for changelog→file export.
-- **console_sink / memory_sink** — S8 inspection surfaces
-  (reference README.md:180, 204).
+- **memory_sink** — the push-query surface (reference README.md:204).
+- **foreach_batch_sink** — any per-micro-batch writer; the three sinks
+  above that need one are built on it.
 
-Every sink takes an explicit checkpoint dir: the engine-side analog of the
-Connect offsets topic (reference docker-compose.yml:70-76).
+Every sink takes a checkpoint dir: the engine-side analog of the Connect
+offsets topic (reference docker-compose.yml:70-76). ``trigger_once`` runs
+the sink as a bounded (availableNow) query over what has landed.
 """
 
 from __future__ import annotations
@@ -20,7 +22,24 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+
+def _start(
+    writer: DataStreamWriter,
+    name: str | None,
+    checkpoint: str | None,
+    output_mode: str,
+    trigger_once: bool,
+) -> StreamingQuery:
+    if name is not None:
+        writer = writer.queryName(name)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    writer = writer.outputMode(output_mode)
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def parquet_sink(
@@ -30,21 +49,28 @@ def parquet_sink(
     name: str,
     max_records_per_file: int = 10,
     trigger_once: bool = False,
-    processing_time: str | None = None,
 ) -> StreamingQuery:
     writer = (
         df.writeStream.format("parquet")
-        .queryName(name)
         .option("path", path)
-        .option("checkpointLocation", checkpoint)
         .option("maxRecordsPerFile", max_records_per_file)
-        .outputMode("append")
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(writer, name, checkpoint, "append", trigger_once)
+
+
+def foreach_batch_sink(
+    df: DataFrame,
+    write_batch,
+    checkpoint: str,
+    name: str | None = None,
+    output_mode: str = "append",
+    trigger_once: bool = False,
+) -> StreamingQuery:
+    """``write_batch(batch_df, batch_id)`` once per micro-batch."""
+    return _start(
+        df.writeStream.foreachBatch(write_batch),
+        name, checkpoint, output_mode, trigger_once,
+    )
 
 
 def keyed_json_sink(
@@ -72,15 +98,7 @@ def keyed_json_sink(
             .json(os.path.join(path, f"batch={batch_id}"))
         )
 
-    writer = (
-        df.writeStream.foreachBatch(write_batch)
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreach_batch_sink(df, write_batch, checkpoint, name, "update", trigger_once)
 
 
 def avro_topic_sink(
@@ -126,15 +144,7 @@ def avro_topic_sink(
             os.path.join(path, f"batch-{batch_id}")
         )
 
-    writer = (
-        df.writeStream.foreachBatch(write_batch)
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreach_batch_sink(df, write_batch, checkpoint, name, "append", trigger_once)
 
 
 def read_avro_topic(
@@ -203,32 +213,18 @@ def upsert_store_sink(
         latest.write.mode("overwrite").parquet(swap_side_dir(store_path))
         commit_dir_swap(store_path)
 
-    writer = (
-        df.writeStream.foreachBatch(write_batch)
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreach_batch_sink(df, write_batch, checkpoint, name, "update", trigger_once)
 
 
 def memory_sink(
-    df: DataFrame, name: str, output_mode: str = "append", trigger_once: bool = False
+    df: DataFrame,
+    name: str,
+    output_mode: str = "append",
+    trigger_once: bool = False,
+    checkpoint: str | None = None,
 ) -> StreamingQuery:
-    """In-memory table sink — the push-query surface (README.md:204)."""
-    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def console_sink(df: DataFrame, name: str, output_mode: str = "append") -> StreamingQuery:
-    return (
-        df.writeStream.format("console")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("truncate", "false")
-        .start()
+    """In-memory table sink — the push-query surface (README.md:204),
+    queryable as ``spark.table(name)``."""
+    return _start(
+        df.writeStream.format("memory"), name, checkpoint, output_mode, trigger_once
     )

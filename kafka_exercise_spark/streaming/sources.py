@@ -1,15 +1,12 @@
 """Streaming sources behind one small interface (SURVEY.md §2.1 S1/S4, §7 C).
 
-Three source families, mirroring the reference topology:
+Source families, mirroring the reference topology:
 
 - **file_stream** — checkpointable parquet-directory stream; with
   ``maxFilesPerTrigger`` it replays bounded fixtures as micro-batches (the
   test strategy of SURVEY.md §5), and unbounded it is the bronze-landing
   consumer (the engine-side analog of subscribing to the Kafka topic the
   JDBC connector feeds, reference README.md:186).
-- **rate_stream** — synthetic generator analog of ``make_fake_data.py``
-  (reference make_fake_data.py:53-81): rows/sec offered load with derived
-  deterministic columns.
 - **kafka_stream** — the real topic source (reference README.md:180-186),
   declared but import-gated: no broker exists in this container, so it
   builds the reader config without starting it.
@@ -19,6 +16,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,33 +25,70 @@ from pyspark.sql.types import StructType
 from kafka_exercise_spark.catalog import load_table, memo, rm_parent_dir
 
 
-def land_events_replay(
-    spark: SparkSession, sf_dir: str, n_files: int = 8
+def land_replay(
+    spark: SparkSession, sf_dir: str, name: str, write: Callable[[str], StructType]
 ) -> tuple[str, StructType]:
-    """Land ``events`` as an n-file parquet dir for bounded replay; memoized.
+    """Land a bounded-replay input once per (session, sf_dir); memoized.
 
-    Replay entries (streaming contract queries, tests) all start by writing
-    the events fixture to a stream-source directory. The write is the
-    single most expensive fixed cost of a bounded replay, and the landed
-    bytes are identical for every consumer — so land once per
-    (sf_dir, n_files) and share; only checkpoints must stay per-run fresh.
-    The landing's temp dir is removed when the memo drops it. Returns
+    Landing the input is the single most expensive fixed cost of a bounded
+    replay, and the landed bytes are identical for every consumer, so each
+    landing is shared; only checkpoints must stay per-run fresh (the
+    harness, ``stateful.run_bounded_replay``, owns those). ``write(src)``
+    lands the files under ``src`` and returns their schema; ``name`` must
+    carry every parameter of ``write``. The landing's temp dir is removed
+    when the memo drops it, or at once if ``write`` raises. Returns
     (src_dir, schema).
     """
 
     def _build():
-        src = os.path.join(tempfile.mkdtemp(prefix="events_replay_src_"), "src")
-        events = load_table(spark, sf_dir, "events")
-        events.repartition(n_files).write.mode("overwrite").parquet(src)
-        return src, events.schema
+        src = os.path.join(tempfile.mkdtemp(prefix=f"{name}_"), "src")
+        try:
+            return src, write(src)
+        except BaseException:
+            rm_parent_dir(src)
+            raise
 
     return memo(
-        spark,
-        f"events_replay_{n_files}",
-        sf_dir,
-        _build,
-        cleanup=lambda landed: rm_parent_dir(landed[0]),
+        spark, name, sf_dir, _build, cleanup=lambda landed: rm_parent_dir(landed[0])
     )
+
+
+def _write_frame(frame: Callable[[], DataFrame], n_files: int):
+    def write(src: str) -> StructType:
+        df = frame()
+        df.repartition(n_files).write.mode("overwrite").parquet(src)
+        return df.schema
+
+    return write
+
+
+def land_events_replay(
+    spark: SparkSession, sf_dir: str, n_files: int = 8
+) -> tuple[str, StructType]:
+    """``events`` landed as an n-file parquet dir (``land_replay``)."""
+    return land_replay(
+        spark, sf_dir, f"events_replay_{n_files}",
+        _write_frame(lambda: load_table(spark, sf_dir, "events"), n_files),
+    )
+
+
+def land_documents_replay(
+    spark: SparkSession, sf_dir: str, columns: tuple[str, ...], new_only: bool = False
+) -> tuple[str, StructType]:
+    """``documents`` projected to ``columns`` (only the incremental batch's
+    docs with ``new_only``), landed as 4 parquet files (``land_replay``)."""
+    from kafka_exercise_spark.operators.dedup import (  # noqa: PLC0415
+        INCREMENTAL_NEW_SOURCE,
+    )
+
+    def frame() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        if new_only:
+            docs = docs.filter(F.col("source") == INCREMENTAL_NEW_SOURCE)
+        return docs.select(*columns)
+
+    name = "documents_replay_" + "_".join(columns) + ("_new" if new_only else "")
+    return land_replay(spark, sf_dir, name, _write_frame(frame, 4))
 
 
 def file_stream(
@@ -72,27 +107,6 @@ def file_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def rate_stream(
-    spark: SparkSession, rows_per_second: int = 2, event_types: int = 5
-) -> DataFrame:
-    """Synthetic event stream ≙ the Faker generator's offered-load shape
-    (reference make_fake_data.py:28-31 defaults to 2 rows/s). Deterministic
-    column derivations — no RNG, so replays are reproducible."""
-    raw = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-    return raw.select(
-        F.col("value").alias("event_id"),
-        F.col("timestamp").alias("ts"),
-        (F.col("value") % 100).alias("user_id"),
-        F.concat(F.lit("type_"), (F.col("value") % event_types)).alias("event_type"),
-        (F.pmod(F.col("value") * 37, 200) / F.lit(1.0)).alias("value"),
-        F.to_json(F.struct((F.col("value") % 97).alias("k"))).alias("props"),
-    )
 
 
 def avro_topic_stream(

@@ -20,6 +20,10 @@ driver can oracle-check them with plain SQL:
   windowed aggregation can't express (the engine-side analog of writing a
   Kafka Streams Processor, which the reference's closed images do
   internally).
+
+Every bounded replay in the package (these, the ``pipeline.py`` replays and
+the serving drain) runs through the one harness defined here,
+``run_bounded_replay``.
 """
 
 from __future__ import annotations
@@ -27,39 +31,23 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from kafka_exercise_spark.catalog import memo
-from kafka_exercise_spark.streaming.sources import file_stream, land_events_replay
+from kafka_exercise_spark.streaming import sinks
+from kafka_exercise_spark.streaming.sources import (
+    file_stream,
+    land_documents_replay,
+    land_events_replay,
+    land_replay,
+)
 from kafka_exercise_spark.streaming.tuning import bounded_replay_conf
 
 CONVERSION_WINDOW = "15 minutes"
-
-
-def _events_replay(
-    spark: SparkSession, sf_dir: str, n_files: int = 8
-) -> tuple[str, str, StructType]:
-    """Bounded-replay inputs: (ckpt_workdir, src_dir, schema).
-
-    The landing dir is memoized per (sf_dir, n_files) and shared across
-    every replay entry (sources.land_events_replay); only the checkpoint
-    dir — which StreamExecution mutates — is fresh per call. Callers
-    rmtree the returned workdir, never the shared landing.
-    """
-    src, schema = land_events_replay(spark, sf_dir, n_files)
-    work = tempfile.mkdtemp(prefix="stateful_replay_ckpt_")
-    return work, src, schema
-
-
-def _fresh_memory_query(spark: SparkSession, name: str) -> None:
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-
 
 #: Wall-clock ceiling for a bounded replay before it is declared hung.
 REPLAY_TIMEOUT_S = 300
@@ -67,24 +55,42 @@ REPLAY_TIMEOUT_S = 300
 
 def run_bounded_replay(
     spark: SparkSession,
-    df: DataFrame,
+    landing: tuple[str, StructType],
+    query: Callable[[DataFrame], DataFrame] | None = None,
     *,
-    checkpoint: str,
+    max_files_per_trigger: int | None = None,
     name: str | None = None,
     output_mode: str | None = None,
     foreach_batch=None,
+    sink=None,
+    result=None,
+    keep_out: bool = False,
     timeout_s: int = REPLAY_TIMEOUT_S,
     final_no_data_batch: bool = True,
-) -> None:
-    """Start a bounded (availableNow) streaming query and wait for it —
-    the ONE replay harness every contract entry uses.
+):
+    """Run ``query`` over a bounded (availableNow) replay of a landing and
+    wait for it — the ONE replay harness every contract entry uses.
 
-    Memory-sink form: pass ``name`` + ``output_mode`` (the result is then
-    ``spark.table(name)``). foreachBatch form: pass ``foreach_batch``.
-    The timeout is CHECKED: ``awaitTermination(t)`` returning False means
-    the query is still running — returning partial results (and letting
-    the caller rmtree a live query's checkpoint/source dirs) would turn a
-    slow host into silent wrong answers, so raise instead.
+    The harness owns everything a replay does the same way:
+
+    - the ``file_stream`` over ``landing`` (``(src_dir, schema)`` from
+      ``sources.land_replay``), ``max_files_per_trigger`` files per batch;
+    - a fresh work dir holding the checkpoint and an output dir ``out``;
+    - the bounded-replay state profile (``tuning.bounded_replay_conf``);
+    - the sink, started through ``streaming/sinks.py`` with one of:
+      ``name`` + ``output_mode`` (memory sink — the result is then
+      ``spark.table(name)``); ``foreach_batch(batch_df, batch_id, out)``;
+      or ``sink(df, out, checkpoint)`` starting any bounded sink;
+    - the CHECKED wait (``await_bounded``);
+    - cleanup in a ``finally``: the work dir goes even when the query
+      raises or times out, and no query is left running.
+
+    Returns ``result(out)``, called after the wait and before cleanup, so
+    it must detach from ``out`` (e.g. ``localCheckpoint``). With
+    ``keep_out`` the output dir survives a successful run (only the
+    checkpoint is removed) and, without ``result``, is returned — for a
+    memo that serves the landed output and removes it with
+    ``catalog.rm_parent_dir``.
 
     ``final_no_data_batch=False`` sets
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` for this one
@@ -104,30 +110,51 @@ def run_bounded_replay(
         if final_no_data_batch
         else {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
     )
-    with bounded_replay_conf(spark, extra=extra):
-        writer = df.writeStream
-        if foreach_batch is not None:
-            writer = writer.foreachBatch(foreach_batch)
-        else:
-            writer = writer.format("memory").outputMode(output_mode)
+    work = tempfile.mkdtemp(prefix="bounded_replay_")
+    ckpt, out = os.path.join(work, "ckpt"), os.path.join(work, "out")
+    os.makedirs(out)
+    started = None
+    kept = False
+    try:
+        df = file_stream(spark, *landing, max_files_per_trigger=max_files_per_trigger)
+        if query is not None:
+            df = query(df)
         if name is not None:
             _fresh_memory_query(spark, name)
-            writer = writer.queryName(name)
-        query = (
-            writer.option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_bounded(query, name=name, timeout_s=timeout_s)
+        with bounded_replay_conf(spark, extra=extra):
+            if sink is not None:
+                started = sink(df, out, ckpt)
+            elif foreach_batch is not None:
+                started = sinks.foreach_batch_sink(
+                    df, lambda batch_df, batch_id: foreach_batch(batch_df, batch_id, out),
+                    ckpt, name, trigger_once=True,
+                )
+            else:
+                started = sinks.memory_sink(
+                    df, name, output_mode, trigger_once=True, checkpoint=ckpt
+                )
+            await_bounded(started, name=name, timeout_s=timeout_s)
+        value = result(out) if result is not None else (out if keep_out else None)
+        kept = keep_out
+        return value
+    finally:
+        if started is not None and started.isActive:
+            started.stop()
+        shutil.rmtree(ckpt if kept else work, ignore_errors=True)
+
+
+def _fresh_memory_query(spark: SparkSession, name: str) -> None:
+    for q in spark.streams.active:
+        if q.name == name:
+            q.stop()
 
 
 def await_bounded(query, *, name: str | None = None, timeout_s: int = REPLAY_TIMEOUT_S) -> None:
-    """Checked wait for an already-started bounded query — shared by
-    ``run_bounded_replay`` and entries that start their sink through the
-    sink helpers (e.g. the serving drain). ``awaitTermination(t)``
-    returning False means the query is still running; returning partial
-    results (and letting the caller rmtree a live query's checkpoint/source
-    dirs) would turn a slow host into silent wrong answers, so raise."""
+    """Checked wait for an already-started bounded query.
+    ``awaitTermination(t)`` returning False means the query is still
+    running; returning partial results (and letting the caller remove a
+    live query's checkpoint/source dirs) would turn a slow host into silent
+    wrong answers, so raise."""
     if not query.awaitTermination(timeout_s):
         query.stop()
         raise TimeoutError(
@@ -175,24 +202,25 @@ def streaming_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver contract: the conversion join run by StreamExecution over a
     bounded replay, aggregated per user. Final rows ≡ the batch interval
     join, so the oracle is plain SQL."""
-    work, src, schema = _events_replay(spark, sf_dir)
     name = "conversion_join_contract"
-    stream = file_stream(spark, src, schema, max_files_per_trigger=None)
-    joined = conversion_join(
-        stream.filter(F.col("event_type") == "click"),
-        stream.filter(F.col("event_type") == "purchase"),
-    )
+
+    def query(stream: DataFrame) -> DataFrame:
+        return conversion_join(
+            stream.filter(F.col("event_type") == "click"),
+            stream.filter(F.col("event_type") == "purchase"),
+        )
+
     # final_no_data_batch=False: an INNER interval join emits each match
     # in the data batch that completes it; the trailing no-data batch
     # only evicts watermark-expired state (measured 1.3-3.5 s — the
     # single largest cost of this replay), and that state dies with the
-    # checkpoint dir below. Output is batch-equivalent either way —
+    # replay's checkpoint. Output is batch-equivalent either way —
     # oracle-verified at sf0.001/0.01/0.1 (r12).
     run_bounded_replay(
-        spark, joined, checkpoint=os.path.join(work, "ckpt"),
+        spark, land_events_replay(spark, sf_dir), query,
         name=name, output_mode="append", final_no_data_batch=False,
     )
-    result = (
+    return (
         spark.table(name)
         .groupBy("user_id")
         .agg(
@@ -200,8 +228,6 @@ def streaming_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("p_value"), 2).alias("conv_value"),
         )
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,21 +238,15 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the batch DISTINCT. Key-only projection keeps the surviving-row
     choice (which is arrival-order-dependent) out of the checked value.
     """
-    work, src, schema = _events_replay(spark, sf_dir)
     name = "dedup_contract"
-    stream = file_stream(spark, src, schema, max_files_per_trigger=2)
-    deduped = (
-        stream.select("user_id", "event_type").dropDuplicates(
-            ["user_id", "event_type"]
-        )
-    )
     run_bounded_replay(
-        spark, deduped, checkpoint=os.path.join(work, "ckpt"),
-        name=name, output_mode="append",
+        spark, land_events_replay(spark, sf_dir),
+        lambda stream: stream.select("user_id", "event_type").dropDuplicates(
+            ["user_id", "event_type"]
+        ),
+        max_files_per_trigger=2, name=name, output_mode="append",
     )
-    result = spark.table(name).select("user_id", "event_type")
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+    return spark.table(name).select("user_id", "event_type")
 
 
 #: output / state schemas for the custom stateful operator
@@ -276,19 +296,14 @@ def streaming_user_state_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # Shares the 8-file landing with the other replays; the query still
     # runs as ONE batch because no maxFilesPerTrigger is set below.
-    work, src, schema = _events_replay(spark, sf_dir)
     name = "user_state_contract"
-    stream = file_stream(spark, src, schema, max_files_per_trigger=None)
-    out = user_running_state(stream)
     run_bounded_replay(
-        spark, out, checkpoint=os.path.join(work, "ckpt"),
+        spark, land_events_replay(spark, sf_dir), user_running_state,
         name=name, output_mode="update",
     )
-    result = spark.table(name).select(
+    return spark.table(name).select(
         "user_id", "n_events", F.round("sum_value", 2).alias("sum_value")
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,83 +322,76 @@ def streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     puts it in a later micro-batch. The sentinel advances the watermark,
     Spark's no-data flush batch closes every real session, and the
     sentinel's own (still-open) session is dropped by the user_id filter.
+    The sentinel landing is memoized like every other (``land_replay``).
     At scale the same pattern is a heartbeat topic/row that keeps watermarks
     moving through traffic gaps.
     """
     from kafka_exercise_spark.operators.analytic import SESSION_GAP, TS_FMT
 
-    n_files = 8
-    # Reuse the shared memoized landing: copy its part files into this
-    # run's source dir instead of re-writing the events parquet through
-    # Spark (a filesystem copy of a few MB vs the replay's single largest
-    # cost; NOT hardlinks — links share the inode, so restamping mtimes
-    # below would mutate the shared landing other replays order by). The
-    # checkpoint/work dir stays private per run.
-    shared_src, schema = land_events_replay(spark, sf_dir, n_files)
-    work = tempfile.mkdtemp(prefix="session_replay_")
-    land = os.path.join(work, "src")
-    os.makedirs(land)
-    import time as _time
-
-    now = _time.time()
-    for f in os.listdir(shared_src):
-        if f.endswith(".parquet"):
-            dst = os.path.join(land, f)
-            shutil.copy(os.path.join(shared_src, f), dst)
-            os.utime(dst, (now, now))
-
-    max_ts = (
-        spark.read.schema(schema)
-        .parquet(land)
-        .agg(F.max("ts"))
-        .collect()[0][0]
-    )
     import datetime
+    import time
 
-    before = {f for f in os.listdir(land) if f.endswith(".parquet")}
-    sentinel_ts = max_ts + datetime.timedelta(hours=5)  # > gap 4 h + delay
-    # Built JVM-side from a 1-partition range: createDataFrame(python rows)
-    # plans a 32-partition Python local relation whose coalesce costs ~3 s
-    # of serial Python-worker spinup for ONE row.
-    sentinel = spark.range(0, 1, 1, 1).select(
-        F.lit(-1).cast("long").alias("event_id"),
-        F.lit(sentinel_ts).alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit("sentinel").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.lit(None).cast("string").alias("props"),
-    )
-    sentinel.write.mode("append").parquet(land)
-    # mtime decides micro-batch order in the file source: push ONLY the
-    # sentinel's part file strictly after the landing's
-    later = _time.time() + 60
-    for f in os.listdir(land):
-        if f.endswith(".parquet") and f not in before:
-            os.utime(os.path.join(land, f), (later, later))
+    n_files = 8
+
+    def land(src: str) -> StructType:
+        # Copy the shared events landing's part files instead of re-writing
+        # the events parquet through Spark (a filesystem copy of a few MB vs
+        # the replay's single largest cost; NOT hardlinks — links share the
+        # inode, so restamping mtimes below would mutate the shared landing
+        # other replays order by).
+        shared_src, schema = land_events_replay(spark, sf_dir, n_files)
+        os.makedirs(src)
+        now = time.time()
+        for f in os.listdir(shared_src):
+            if f.endswith(".parquet"):
+                dst = os.path.join(src, f)
+                shutil.copy(os.path.join(shared_src, f), dst)
+                os.utime(dst, (now, now))
+        max_ts = spark.read.schema(schema).parquet(src).agg(F.max("ts")).collect()[0][0]
+        before = set(os.listdir(src))
+        sentinel_ts = max_ts + datetime.timedelta(hours=5)  # > gap 4 h + delay
+        # Built JVM-side from a 1-partition range: createDataFrame(python rows)
+        # plans a 32-partition Python local relation whose coalesce costs ~3 s
+        # of serial Python-worker spinup for ONE row.
+        sentinel = spark.range(0, 1, 1, 1).select(
+            F.lit(-1).cast("long").alias("event_id"),
+            F.lit(sentinel_ts).alias("ts"),
+            F.lit(-1).cast("long").alias("user_id"),
+            F.lit("sentinel").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit(None).cast("string").alias("props"),
+        )
+        sentinel.write.mode("append").parquet(src)
+        # mtime decides micro-batch order in the file source: push ONLY the
+        # sentinel's part file strictly after the landing's
+        later = time.time() + 60
+        for f in os.listdir(src):
+            if f.endswith(".parquet") and f not in before:
+                os.utime(os.path.join(src, f), (later, later))
+        return schema
+
+    def sessions(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", "1 minute")
+            .groupBy(F.session_window("ts", SESSION_GAP), "user_id")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.round(F.sum("value"), 2).alias("session_value"),
+            )
+        )
 
     name = "session_replay_contract"
-    stream = file_stream(spark, land, schema, max_files_per_trigger=n_files)
-    sess = (
-        stream.withWatermark("ts", "1 minute")
-        .groupBy(F.session_window("ts", SESSION_GAP), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("session_value"),
-        )
-    )
     run_bounded_replay(
-        spark, sess, checkpoint=os.path.join(work, "ckpt"),
-        name=name, output_mode="append",
+        spark, land_replay(spark, sf_dir, f"events_sentinel_replay_{n_files}", land),
+        sessions, max_files_per_trigger=n_files, name=name, output_mode="append",
     )
-    result = spark.table(name).filter(F.col("user_id") >= 0).select(
+    return spark.table(name).filter(F.col("user_id") >= 0).select(
         "user_id",
         F.date_format("session_window.start", TS_FMT).alias("session_start"),
         F.date_format("session_window.end", TS_FMT).alias("session_end"),
         "n_events",
         "session_value",
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_neardup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,14 +442,7 @@ def streaming_neardup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     old_bands, old_sets = memo(spark, "neardup_index", sf_dir, _build)
 
-    work = tempfile.mkdtemp(prefix="neardup_replay_")
-    src = os.path.join(work, "src")
-    out = os.path.join(work, "out")
-    new_docs = docs.filter(is_new).select("doc_id", "text")
-    new_docs.repartition(4).write.mode("overwrite").parquet(src)
-    src_schema = new_docs.schema
-
-    def probe(batch_df: DataFrame, batch_id: int) -> None:
+    def probe(batch_df: DataFrame, batch_id: int, out: str) -> None:
         # the SAME primitive as the batch operator — probe_index is shared
         # so the verify math can never drift between batch and streaming
         verified = probe_index(
@@ -449,19 +450,14 @@ def streaming_neardup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         verified.write.mode("append").parquet(out)
 
-    name = "neardup_contract"
     # 2 files/trigger over the 4-file landing = 2 micro-batches: still a
     # genuine multi-batch probe (the contract under test) at half the
     # per-batch job overhead of one-file triggers
-    stream = file_stream(spark, src, src_schema, max_files_per_trigger=2)
-    run_bounded_replay(
-        spark, stream, checkpoint=os.path.join(work, "ckpt"),
-        name=name, foreach_batch=probe,
+    return run_bounded_replay(
+        spark, land_documents_replay(spark, sf_dir, ("doc_id", "text"), new_only=True),
+        max_files_per_trigger=2, name="neardup_contract", foreach_batch=probe,
+        result=lambda out: spark.read.parquet(out).localCheckpoint(),
     )
-    # detach from the temp dir before cleanup
-    result = spark.read.parquet(out).localCheckpoint()
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_winnow_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,16 +482,11 @@ def streaming_winnow_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own fingerprints against it. Results append to a parquet sink
     dir (exactly-once via the foreachBatch append + file-source log).
     """
-    from kafka_exercise_spark.catalog import load_table  # noqa: PLC0415
     from kafka_exercise_spark.operators.dedup import (  # noqa: PLC0415
-        INCREMENTAL_NEW_SOURCE,
         winnow_corpus_sides,
         winnow_probe_index,
         winnow_selected,
     )
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_new = F.col("source") == INCREMENTAL_NEW_SOURCE
 
     # the corpus winnow index (postings, per-doc counts, census domain)
     def _build():
@@ -508,14 +499,7 @@ def streaming_winnow_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     old_rare, old_counts, fp_domain = memo(spark, "winnow_index", sf_dir, _build)
 
-    work = tempfile.mkdtemp(prefix="winnow_replay_")
-    src = os.path.join(work, "src")
-    out = os.path.join(work, "out")
-    new_docs = docs.filter(is_new).select("doc_id", "text")
-    new_docs.repartition(4).write.mode("overwrite").parquet(src)
-    src_schema = new_docs.schema
-
-    def probe(batch_df: DataFrame, batch_id: int) -> None:
+    def probe(batch_df: DataFrame, batch_id: int, out: str) -> None:
         # fingerprint the arriving text live (shared selection primitive),
         # keep only census-domain fps, probe with the shared primitive —
         # each doc's text arrives whole, so its pair rows are complete
@@ -527,14 +511,11 @@ def streaming_winnow_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         verified = winnow_probe_index(batch_rare, old_rare, old_counts)
         verified.write.mode("append").parquet(out)
 
-    stream = file_stream(spark, src, src_schema, max_files_per_trigger=2)
-    run_bounded_replay(
-        spark, stream, checkpoint=os.path.join(work, "ckpt"),
-        name="winnow_contract", foreach_batch=probe,
+    return run_bounded_replay(
+        spark, land_documents_replay(spark, sf_dir, ("doc_id", "text"), new_only=True),
+        max_files_per_trigger=2, name="winnow_contract", foreach_batch=probe,
+        result=lambda out: spark.read.parquet(out).localCheckpoint(),
     )
-    result = spark.read.parquet(out).localCheckpoint()
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 #: output schema for the transformWithState distinct-type tracker
@@ -606,24 +587,19 @@ def streaming_distinct_state_replay(spark: SparkSession, sf_dir: str) -> DataFra
     """Driver contract: transformWithState distinct-type tracker over a
     4-micro-batch replay; final per-user emission ≡ batch
     ``count(DISTINCT event_type)``."""
-    work, src, schema = _events_replay(spark, sf_dir)
     name = "tws_contract"
-    stream = file_stream(spark, src, schema, max_files_per_trigger=2)
-    counted = user_distinct_types(stream)
     run_bounded_replay(
-        spark, counted, checkpoint=os.path.join(work, "ckpt"),
-        name=name, output_mode="update",
+        spark, land_events_replay(spark, sf_dir), user_distinct_types,
+        max_files_per_trigger=2, name=name, output_mode="update",
     )
     # update-mode memory sink appends one row per (user, batch-appeared);
     # the running count is monotone, so MAX = the final state
-    result = (
+    return (
         spark.table(name)
         .groupBy("user_id")
         .agg(F.max("n_event_types").alias("n_event_types"))
         .localCheckpoint()
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -643,26 +619,25 @@ def streaming_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from kafka_exercise_spark.catalog import load_table  # noqa: PLC0415
 
-    work, src, schema = _events_replay(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    name = "enrich_contract"
-    stream = file_stream(spark, src, schema, max_files_per_trigger=2)
-    agg = (
-        stream.join(dim, "user_id")  # stateless per batch; customer is
-        # ∝-data so no hint — Catalyst broadcasts the static side from
-        # its file-size stats while under the threshold
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
+
+    def enrich(stream: DataFrame) -> DataFrame:
+        return (
+            stream.join(dim, "user_id")  # stateless per batch; customer is
+            # ∝-data so no hint — Catalyst broadcasts the static side from
+            # its file-size stats while under the threshold
+            .groupBy("c_mktsegment")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.round(F.sum("value"), 2).alias("total_value"),
+            )
         )
-    )
+
+    name = "enrich_contract"
     run_bounded_replay(
-        spark, agg, checkpoint=os.path.join(work, "ckpt"),
-        name=name, output_mode="complete",
+        spark, land_events_replay(spark, sf_dir), enrich,
+        max_files_per_trigger=2, name=name, output_mode="complete",
     )
-    result = spark.table(name).localCheckpoint()
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+    return spark.table(name).localCheckpoint()

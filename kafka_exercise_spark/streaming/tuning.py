@@ -17,7 +17,11 @@ values differ by deployment shape:
 
 ``bounded_replay_conf`` applies the replay profile for the duration of one
 query and restores the session afterwards. The confs are session-wide, so
-any other query started in the same session meanwhile inherits them.
+any other query started in the same session meanwhile inherits them. Its
+one caller is the bounded-replay harness, ``stateful.run_bounded_replay``,
+which owns everything else a replay does the same way: the file stream
+over a memoized landing, a fresh checkpoint and output dir, the sink start,
+the checked wait and the cleanup.
 """
 
 from __future__ import annotations

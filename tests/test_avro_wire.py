@@ -390,6 +390,7 @@ def test_streaming_avro_topic_sink_roundtrip(spark, sf_dir, tmp_path):
     from kafka_exercise_spark.catalog import load_table
     from kafka_exercise_spark.streaming import sinks
     from kafka_exercise_spark.streaming.sources import file_stream, land_events_replay
+    from kafka_exercise_spark.streaming.stateful import await_bounded
 
     src_dir, schema = land_events_replay(spark, sf_dir, n_files=4)
     stream = file_stream(spark, src_dir, schema, max_files_per_trigger=2)
@@ -412,7 +413,7 @@ def test_streaming_avro_topic_sink_roundtrip(spark, sf_dir, tmp_path):
         schema_id=7,
         trigger_once=True,
     )
-    q.awaitTermination(120)
+    await_bounded(q, timeout_s=120)
 
     raw = spark.read.option("recursiveFileLookup", "true").parquet(out)
     first = bytes(raw.first().value)
@@ -449,6 +450,7 @@ def test_streaming_avro_consumer_decodes_topic(spark, sf_dir, tmp_path):
         file_stream,
         land_events_replay,
     )
+    from kafka_exercise_spark.streaming.stateful import await_bounded
 
     src_dir, schema = land_events_replay(spark, sf_dir, n_files=4)
     stream = file_stream(spark, src_dir, schema, max_files_per_trigger=4)
@@ -470,7 +472,7 @@ def test_streaming_avro_consumer_decodes_topic(spark, sf_dir, tmp_path):
         schema_json=SPARK_SCHEMA,
         trigger_once=True,
     )
-    q.awaitTermination(120)
+    await_bounded(q, timeout_s=120)
 
     consumer = avro_topic_stream(
         spark, topic_dir, SPARK_SCHEMA, max_files_per_trigger=2
@@ -486,7 +488,7 @@ def test_streaming_avro_consumer_decodes_topic(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q2.awaitTermination(120)
+    await_bounded(q2, timeout_s=120)
     got = {
         (r["event_type"], r["n"], r["sv"])
         for r in spark.table("avro_consumer_agg").collect()

@@ -44,6 +44,7 @@ def test_kafka_stream_starts_and_consumes(spark, tmp_path):
     """kafka_stream (streaming/sources.py) against a real broker: start the
     reader, land one micro-batch, assert the key/value frame shape."""
     from kafka_exercise_spark.streaming.sources import kafka_stream
+    from kafka_exercise_spark.streaming.stateful import await_bounded
 
     stream = kafka_stream(
         spark, os.environ[KAFKA_ENV], topic="psg-customers"
@@ -55,7 +56,7 @@ def test_kafka_stream_starts_and_consumes(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, timeout_s=120)
     landed = spark.read.parquet(str(tmp_path / "out"))
     assert {"key", "value", "topic", "partition", "offset"} <= set(landed.columns)
 

@@ -266,6 +266,7 @@ def test_streaming_ctas_equals_batch(spark, sf_dir, tmp_path):
     final state == the batch answer (stream/table duality on the dialect
     surface)."""
     from kafka_exercise_spark.streaming.sources import file_stream, land_events_replay
+    from kafka_exercise_spark.streaming.stateful import await_bounded
 
     src_dir, schema = land_events_replay(spark, sf_dir, n_files=4)
     stream = file_stream(spark, src_dir, schema, max_files_per_trigger=2)
@@ -293,7 +294,7 @@ def test_streaming_ctas_equals_batch(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, timeout_s=120)
     got = {
         (r["windowstart"], r["idadecat"] if "idadecat" in r else r["event_type"]):
             r["contagem"]

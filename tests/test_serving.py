@@ -79,11 +79,9 @@ def test_refresh_rejects_non_rollup(spark, lake):
         layer.refresh("events_lake")
 
 
-def test_serving_lake_rollup_contract(spark, sf_dir):
-    """The driver entry end-to-end: streamed lake state ≡ batch rollup."""
-    got = serving_lake_rollup(spark, sf_dir)
+def _batch_rollup(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
-    expect = (
+    return (
         events.filter(F.date_format("ts", "yyyy-MM-dd") >= "2024-01-15")
         .groupBy(
             F.date_format("ts", "yyyy-MM-dd").alias("dt_event"), "event_type"
@@ -93,4 +91,51 @@ def test_serving_lake_rollup_contract(spark, sf_dir):
             F.countDistinct("user_id").alias("n_users"),
         )
     )
+
+
+def test_serving_lake_rollup_contract(spark, sf_dir):
+    """The driver entry end-to-end: streamed lake state ≡ batch rollup."""
+    got = serving_lake_rollup(spark, sf_dir)
+    expect = _batch_rollup(spark, sf_dir)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect()))
+
+
+def test_serving_lake_dir_is_removed_when_a_rewrite_rebuilds(spark, sf_dir, tmp_path):
+    """The memoized lake (drained lake, checkpoint, rollup) lives in one
+    temp dir; rewriting a table under the same sf_dir rebuilds the layer
+    and must remove the old dir instead of leaking it."""
+    import shutil
+    import tempfile
+    from urllib.parse import urlparse
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from kafka_exercise_spark import catalog
+
+    def served_dir() -> str:
+        """The top-level temp dir the served rollup's files live in."""
+        rollup = urlparse(spark.table("jovens_daily").inputFiles()[0]).path
+        tmp = tempfile.gettempdir()
+        return os.path.join(tmp, os.path.relpath(rollup, tmp).split(os.sep)[0])
+
+    def expected(sf: str) -> list[tuple]:
+        return sorted(map(tuple, _batch_rollup(spark, sf).collect()))
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, sf, copy_function=shutil.copyfile)
+    first = sorted(map(tuple, serving_lake_rollup(spark, sf).collect()))
+    assert first == expected(sf)
+    served = served_dir()
+    assert os.path.isdir(served) and served != tempfile.gettempdir()
+
+    path = catalog.table_path(sf, "events")
+    table = pq.read_table(path)
+    subset = table.filter(pc.equal(pc.bit_wise_and(table["event_id"], 1), 0))
+    assert 0 < subset.num_rows < table.num_rows
+    pq.write_table(subset, path + ".tmp")
+    os.replace(path + ".tmp", path)
+
+    second = sorted(map(tuple, serving_lake_rollup(spark, sf).collect()))
+    assert second == expected(sf) != first
+    assert not os.path.exists(served)

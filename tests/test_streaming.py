@@ -27,6 +27,7 @@ from kafka_exercise_spark.sources.incremental import (
 )
 from kafka_exercise_spark.streaming import sinks, sources
 from kafka_exercise_spark.streaming.pipeline import PipelineManager
+from kafka_exercise_spark.streaming.stateful import await_bounded
 
 
 @pytest.fixture(scope="module")
@@ -77,7 +78,7 @@ def test_streaming_window_count_equals_batch(spark, sf_dir, replay_dir, tmp_path
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, timeout_s=120)
     got = {
         (r["window_start"], r["idadecat"]): r["contagem"]
         for r in spark.table("idadecont_replay").collect()
@@ -101,7 +102,7 @@ def test_jovens_parquet_sink_flush_size(spark, sf_dir, replay_dir, tmp_path):
     mgr = PipelineManager(spark, str(tmp_path / "ckpt"))
     out = str(tmp_path / "jovens_out")
     q = mgr.start_jovens(stream, out, flush_size=10, trigger_once=True)
-    q.awaitTermination(120)
+    await_bounded(q, timeout_s=120)
     files = glob.glob(os.path.join(out, "*.parquet"))
     assert files, "sink produced no files"
     for f in files:
@@ -126,7 +127,7 @@ def test_keyed_json_sink_writes_keys(spark, sf_dir, replay_dir, tmp_path):
     mgr = PipelineManager(spark, str(tmp_path / "ckpt"))
     out = str(tmp_path / "idadecont_out")
     q = mgr.start_idadecont(stream, out, watermark="10 minutes", trigger_once=True)
-    q.awaitTermination(120)
+    await_bounded(q, timeout_s=120)
     json_files = glob.glob(os.path.join(out, "batch=*", "*.json"))
     assert json_files
     with open(json_files[0]) as f:
@@ -152,7 +153,7 @@ def test_upsert_store_keeps_latest_per_key(spark, sf_dir, replay_dir, tmp_path):
         key_cols=["window_start", "idadecat"],
         trigger_once=True,
     )
-    q.awaitTermination(120)
+    await_bounded(q, timeout_s=120)
     got_df = spark.read.parquet(store)
     # one row per key — the upsert compacted the changelog
     assert (
@@ -220,7 +221,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_bounded(q, timeout_s=120)
     emitted = {r["wstart"] for r in spark.read.parquet(out).collect()}
     # finalized on-time windows were emitted (run 3's watermark passed them)…
     assert base in emitted
@@ -357,7 +358,7 @@ def test_file_stream_lists_landed_files_on_the_driver(spark, tmp_path):
     q = sinks.parquet_sink(
         stream, out, str(tmp_path / "ck"), "listing_fence", trigger_once=True
     )
-    q.awaitTermination(120)
+    await_bounded(q, timeout_s=120)
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
     descriptions = []
@@ -398,6 +399,43 @@ def test_live_session_defaults_yield_to_extra_conf(spark, tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     line = next(ln for ln in proc.stdout.splitlines() if ln.startswith("CONF:"))
     assert json.loads(line[len("CONF:"):]) == want
+
+
+def test_push_query_serves_rows_from_its_memory_table(spark, tmp_path):
+    """PipelineManager's push query (EMIT CHANGES to a client) drains the
+    stream into a memory table the client reads with ``spark.table``."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    t0 = dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)
+    _land(src, "f0.parquet", [(i, t0 + dt.timedelta(seconds=i), 1.0) for i in range(3)])
+    _land(src, "f1.parquet", [(i, t0 + dt.timedelta(seconds=i), 2.0) for i in range(3, 5)])
+    stream = sources.file_stream(spark, src, LIVE_SCHEMA, max_files_per_trigger=1)
+    mgr = PipelineManager(spark, str(tmp_path / "ckpt"))
+    q = mgr.start_push_query(
+        stream.select("event_id", "value"), "push_query_test", trigger_once=True
+    )
+    await_bounded(q, timeout_s=120)
+    assert mgr.queries == {"push_query_test": q}
+    got = sorted(tuple(r) for r in spark.table("push_query_test").collect())
+    assert got == [(0, 1.0), (1, 1.0), (2, 1.0), (3, 2.0), (4, 2.0)]
+    mgr.stop_all()
+
+
+def test_incremental_source_snapshot_leaves_no_mark_dir(spark, sf_dir):
+    """The entry's high-water-mark file is read when the poll is planned,
+    so its temp dir is gone by the time the frame is returned — and the
+    frame still runs."""
+    import tempfile
+
+    from kafka_exercise_spark.streaming.pipeline import incremental_source_snapshot
+
+    def marks() -> set[str]:
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "hwm_*")))
+
+    before = marks()
+    snap = incremental_source_snapshot(spark, sf_dir)
+    assert marks() == before
+    assert snap.count() > 0
 
 
 def test_incremental_source_captures_appends_only(spark, sf_dir, tmp_path):

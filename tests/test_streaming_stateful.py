@@ -3,15 +3,11 @@ the single-shot driver contract can't see."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from kafka_exercise_spark.catalog import load_table
 from kafka_exercise_spark.streaming import stateful
-from kafka_exercise_spark.streaming.sources import file_stream
+from kafka_exercise_spark.streaming.sources import land_events_replay
 
 
 def test_conversion_join_equals_batch(spark, sf_dir):
@@ -68,29 +64,15 @@ def test_dedup_within_watermark_single_batch(spark, sf_dir):
     Single batch ⇒ the watermark can't drop anything mid-run, so the result
     is exactly DISTINCT while still running the watermark-aged state store.
     """
-    work = tempfile.mkdtemp(prefix="dedup_wm_")
-    src = os.path.join(work, "src")
     events = load_table(spark, sf_dir, "events")
-    events.write.mode("overwrite").parquet(src)
     name = "dedup_wm_test"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    stream = file_stream(spark, src, events.schema, max_files_per_trigger=None)
-    deduped = (
-        stream.withWatermark("ts", "1 hour")
+    stateful.run_bounded_replay(
+        spark, land_events_replay(spark, sf_dir),
+        lambda stream: stream.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .select("user_id", "event_type")
+        .select("user_id", "event_type"),
+        name=name, output_mode="append",
     )
-    query = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(300)
     got = {
         (r["user_id"], r["event_type"]) for r in spark.table(name).collect()
     }
@@ -98,7 +80,6 @@ def test_dedup_within_watermark_single_batch(spark, sf_dir):
         (r["user_id"], r["event_type"])
         for r in events.select("user_id", "event_type").distinct().collect()
     }
-    shutil.rmtree(work, ignore_errors=True)
     assert got == want
 
 
@@ -106,25 +87,13 @@ def test_user_state_incremental_trajectory(spark, sf_dir):
     """Two micro-batches: GroupState must carry counts across batches —
     every user's final emission equals the batch aggregate, and any
     intermediate emission is strictly smaller."""
-    work = tempfile.mkdtemp(prefix="state_traj_")
-    src = os.path.join(work, "src")
     events = load_table(spark, sf_dir, "events")
-    events.repartition(2).write.mode("overwrite").parquet(src)
     name = "user_state_traj"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    stream = file_stream(spark, src, events.schema, max_files_per_trigger=1)
-    out = stateful.user_running_state(stream)
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    stateful.run_bounded_replay(
+        spark, land_events_replay(spark, sf_dir, n_files=2),
+        stateful.user_running_state,
+        max_files_per_trigger=1, name=name, output_mode="update",
     )
-    query.awaitTermination(300)
     emissions: dict[int, list[int]] = {}
     for r in spark.table(name).collect():
         emissions.setdefault(r["user_id"], []).append(r["n_events"])
@@ -132,7 +101,6 @@ def test_user_state_incremental_trajectory(spark, sf_dir):
         r["user_id"]: r["n"]
         for r in events.groupBy("user_id").agg(F.count("*").alias("n")).collect()
     }
-    shutil.rmtree(work, ignore_errors=True)
     assert set(emissions) == set(want)
     multi = 0
     for uid, counts in emissions.items():
